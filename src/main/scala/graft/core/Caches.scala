@@ -2,16 +2,18 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped cache governance for pipeline builders.
   *
   * Two cache lifetimes exist in this engine:
   *
   *   - SANCTIONED artifacts model materialized storage: the series table
-  *     ([[SeriesOps.series]]) and the minhash near-dup pair set
-  *     ([[graft.entry.PipelineQueries]]). Production queries READ these
-  *     instead of re-deriving them; their one-off build cost is storage
-  *     provisioning, not query time. They live for the session.
+  *     ([[SeriesOps.series]]), the minhash near-dup pair set, the
+  *     similarity and near-dup indexes, trained models. Production
+  *     queries READ these instead of re-deriving them; their one-off
+  *     build cost is storage provisioning, not query time. They live
+  *     until [[evictArtifacts]] drops them.
   *   - TRANSIENT pins are builder intermediates (shingle tables, candidate
   *     pair sets, ANN cell assignments) persisted because one query's plan
   *     consumes them several times. They are registered here at build time
@@ -19,15 +21,37 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   *     the bench loop, after verification, or whenever the caller wants
   *     storage back.
   *
+  * Every sanctioned artifact is built through an [[ArtifactMemo]], which
+  * owns the whole lifecycle:
+  *
+  *   - KEY: a product carrying the SparkSession and the data dir, e.g.
+  *     `(SparkSession, String)` or `(SparkSession, String, Int)`. A key
+  *     string `<dir>#<suffix>` is the SUB-CORPUS convention: an artifact
+  *     over a subset or derived view of `dir` (a refresh batch, a
+  *     base-subset store), evicted with `dir`.
+  *   - BUILD: once per key. Every DataFrame in the built value — the value
+  *     itself or an element of a tuple — is sanctioned, so
+  *     [[releaseTransient]] never drops it, and persisted at
+  *     MEMORY_AND_DISK unless it already is: a frame shared with another
+  *     artifact is not persisted again, and a build may persist a frame
+  *     early when a later step of the same build reads it (an eager job,
+  *     or a frame whose cached plan should read it).
+  *   - EVICTION: [[evictArtifacts]] drops every entry of every memo whose
+  *     key matches (session, dir), unpersisting and unsanctioning the
+  *     frames its value carries.
+  *   - TRACE: each memo has one label, the `File.scala:line` that
+  *     constructs it; [[traceArtifacts]] notes warm reads and cold builds
+  *     by that label. One memo per artifact kind: builds nest (an index
+  *     built over another memo's index), and one map cannot run a
+  *     computeIfAbsent inside its own.
+  *
   * Staleness contract: Spark's CacheManager substitutes any cached plan by
   * canonical equality, so a pinned frame SHADOWS recomputation — if the
   * underlying parquet is overwritten mid-session, pinned results serve the
   * old data until released. Callers that rewrite inputs must call
-  * [[releaseTransient]] (and rebuild sanctioned artifacts) first.
+  * [[releaseTransient]] and [[evictArtifacts]] first.
   *
-  * Registration is identity-based (Dataset does not override equals);
-  * memoizing call-sites hand the same object in, so promotion from
-  * transient to sanctioned is a set lookup.
+  * Registration is identity-based (Dataset does not override equals).
   */
 object Caches {
   private val pinned =
@@ -39,11 +63,6 @@ object Caches {
     * materialized here; the frame caches on its first action.
     */
   def deferRelease(df: DataFrame): DataFrame = { pinned.add(df); df }
-
-  /** Promote a persisted frame to session-lifetime materialized artifact:
-    * [[releaseTransient]] will never unpersist it.
-    */
-  def sanction(df: DataFrame): DataFrame = { sanctionedDfs.add(df); df }
 
   /** Unpersist ONE deferred pin immediately and drop it from the registry
     * — for builders whose results are fully driver-local before they
@@ -83,27 +102,28 @@ object Caches {
     n
   }
 
-  // -------------------------------------------- artifact-memo registry
+  // -------------------------------------------- artifact memos
 
-  /** Registered (session, dir)-keyed memo caches — the gate harness's
-    * band indexes, dup-gram tables, trained models. Registration gives
-    * the staleness contract above its missing INVALIDATION hook: a
-    * caller that regenerates the tables under a dir calls
-    * [[evictArtifacts]] so a refreshed corpus can never pair with a
-    * stale frozen artifact (r14 advisory).
+  private val artifactMemos =
+    new java.util.concurrent.ConcurrentLinkedQueue[ArtifactMemo[_, _]]()
+
+  /** The DataFrames a memo value carries: the value itself, or the
+    * elements of a product (e.g. an (index, centroids) pair), recursively.
     */
-  private val artifactCaches = new java.util.concurrent
-    .ConcurrentLinkedQueue[java.util.concurrent.ConcurrentHashMap[_, _]]()
+  private def framesIn(v: Any): Iterator[DataFrame] = v match {
+    case df: DataFrame => Iterator.single(df)
+    case p: Product => p.productIterator.flatMap(framesIn)
+    case _ => Iterator.empty
+  }
 
   // ---- construction-time artifact-read tracing (bench {cold, warm}) --
   //
   // Several gates consume a memoized artifact ENTIRELY at plan
   // construction (eager localCheckpoint, driver-collected model state),
-  // so the final plan shows no InMemoryRelation to introspect. The memo
-  // maps themselves are the one common chokepoint: every accessor goes
-  // through a registered map, so a tracing subclass notes warm hits and
-  // cold builds into a thread-local the bench brackets around each
-  // timed construction / warmup step. Zero cost when no trace is active.
+  // so the final plan shows no InMemoryRelation to introspect. The memos
+  // are the one common chokepoint: every lookup notes a warm hit or a
+  // cold build into a thread-local the bench brackets around each timed
+  // construction / warmup step. Zero cost when no trace is active.
 
   private val traceBuf =
     new ThreadLocal[scala.collection.mutable.LinkedHashSet[(String, String)]]
@@ -113,10 +133,10 @@ object Caches {
     if (b != null) { b += ((kind, label)); () }
   }
 
-  /** Run `body` collecting (reads, builds) of registered memo artifacts
-    * on THIS thread: `reads` are warm memo hits, `builds` are entries the
-    * body itself created (it paid for them). Labels are the registering
-    * call-site (`File.scala:line`).
+  /** Run `body` collecting (reads, builds) of memoized artifacts on THIS
+    * thread: `reads` are warm memo hits, `builds` are entries the body
+    * itself created (it paid for them). Labels are the memos' trace
+    * labels (see the class doc), each listed once.
     */
   def traceArtifacts[T](body: => T): (T, Seq[String], Seq[String]) = {
     val b = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
@@ -128,98 +148,92 @@ object Caches {
     } finally traceBuf.remove()
   }
 
-  private final class TracingMap[K, V](label: String)
-      extends java.util.concurrent.ConcurrentHashMap[K, V] {
-    override def computeIfAbsent(
-        key: K, f: java.util.function.Function[_ >: K, _ <: V]): V = {
+  /** One kind of sanctioned artifact, memoized per key — the lifecycle in
+    * the class doc. Construct it once, as a `val` of the owning object.
+    */
+  final class ArtifactMemo[K, V] {
+    private val entries = new java.util.concurrent.ConcurrentHashMap[K, V]()
+    private val label = Thread.currentThread.getStackTrace
+      .find(f => !f.getClassName.startsWith("java.") &&
+        !f.getClassName.startsWith("graft.core.Caches$") &&
+        !f.getClassName.startsWith("scala."))
+      .map(f => s"${f.getFileName}:${f.getLineNumber}")
+      .getOrElse("artifact")
+    artifactMemos.add(this)
+
+    /** The artifact for `key`, built by `build` on the first lookup. */
+    def apply(key: K)(build: => V): V = {
       // read-vs-build decided by whether the mapping function actually
       // ran — exact even when two threads race on a first access (a
       // pre-check of containsKey would mislabel the loser's warm read
       // as a cold build)
       var built = false
-      val v = super.computeIfAbsent(key,
-        (k: K) => { built = true; f(k) })
+      val v = entries.computeIfAbsent(key, _ => {
+        built = true
+        val v = build
+        framesIn(v).foreach { df =>
+          if (df.storageLevel == StorageLevel.NONE)
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+          sanctionedDfs.add(df)
+        }
+        v
+      })
       note(if (built) "build" else "read", label)
       v
     }
-    override def get(key: Any): V = {
-      val v = super.get(key)
-      if (v.asInstanceOf[AnyRef] ne null) note("read", label)
-      v
-    }
-  }
 
-  /** Register a memo cache whose keys are products carrying the
-    * SparkSession and the data dir (e.g. `(SparkSession, String)` or
-    * `(SparkSession, String, Double)`). Returns the map for inline use —
-    * a TRACING map (the passed instance is expected empty and is only a
-    * type witness), labeled by the registering call-site.
-    */
-  def registerArtifactCache[K, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V])
-      : java.util.concurrent.ConcurrentHashMap[K, V] = {
-    val label = Thread.currentThread.getStackTrace
-      .find(f => !f.getClassName.startsWith("java.") &&
-        !f.getClassName.contains("graft.core.Caches") &&
-        !f.getClassName.startsWith("scala."))
-      .map(f => s"${f.getFileName}:${f.getLineNumber}")
-      .getOrElse("artifact")
-    val t = new TracingMap[K, V](label)
-    artifactCaches.add(t)
-    t
-  }
+    private[core] def contains(key: K): Boolean = entries.containsKey(key)
 
-  /** Drop every registered memo entry scoped to (spark, dir), releasing
-    * any persisted frames the value carries (directly or inside a
-    * product, e.g. an (index, centroids) pair). Returns how many entries
-    * were evicted. The next consumer rebuilds from current storage.
-    *
-    * Also invalidates the CacheManager's PLAN-EQUALITY caches whose
-    * relations read files under `dir` (`recacheByPath`): without this, a
-    * cached frame built over the old contents — not necessarily one this
-    * registry knows about — would keep serving stale blocks to any
-    * canonically-equal subplan, and the memo rebuild itself could read
-    * it (r15 advisory: the doc promised "a refreshed corpus can never
-    * pair with a stale frozen artifact", the hook alone delivered less).
-    */
-  def evictArtifacts(spark: SparkSession, dir: String): Int = {
-    org.apache.spark.sql.GraftBridge.recacheByPath(spark, dir)
-    def unpersistIn(v: Any): Unit = v match {
-      case df: DataFrame =>
-        sanctionedDfs.remove(df)
-        pinned.remove(df)
-        df.unpersist(blocking = true)
-      case p: Product => p.productIterator.foreach(unpersistIn)
-      case _ => ()
-    }
-    var n = 0
-    artifactCaches.forEach { m =>
-      val it = m.entrySet().iterator()
+    private[Caches] def evict(spark: SparkSession, dir: String): Int = {
+      var n = 0
+      val it = entries.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
-        val hit = e.getKey match {
-          case p: Product =>
-            p.productIterator.exists(_.asInstanceOf[AnyRef] eq spark) &&
-              p.productIterator.exists {
-                // a key element `<dir>#<suffix>` is the SUB-CORPUS
-                // convention (a store over a subset/derived view of
-                // `dir` — e.g. the IVF refresh gate's base-subset
-                // store): its artifacts derive from the same files,
-                // so a refresh of `dir` must invalidate them too, or
-                // a stale frozen artifact pairs with fresh data (the
-                // r15 advisory class)
-                case s: String => s == dir || s.startsWith(dir + "#")
-                case _ => false
-              }
-          case _ => false
-        }
-        if (hit) {
-          unpersistIn(e.getValue)
+        if (scopedTo(e.getKey, spark, dir)) {
+          framesIn(e.getValue).foreach { df =>
+            sanctionedDfs.remove(df)
+            pinned.remove(df)
+            df.unpersist(blocking = true)
+          }
           it.remove()
           n += 1
         }
       }
+      n
     }
+  }
+
+  /** Whether a memo key is scoped to (spark, dir): a product with the
+    * session as one element and `dir`, or a `dir#suffix` sub-corpus, as
+    * another. `dir` + any other continuation ("/data/v1x", "dir/x") is a
+    * different corpus.
+    */
+  private def scopedTo(key: Any, spark: SparkSession, dir: String): Boolean =
+    key match {
+      case p: Product =>
+        p.productIterator.exists(_.asInstanceOf[AnyRef] eq spark) &&
+          p.productIterator.exists {
+            case s: String => s == dir || s.startsWith(dir + "#")
+            case _ => false
+          }
+      case _ => false
+    }
+
+  /** Drop every memo entry scoped to (spark, dir), releasing the
+    * persisted frames its value carries. Returns how many entries were
+    * evicted. The next consumer rebuilds from current storage.
+    *
+    * Also invalidates the CacheManager's PLAN-EQUALITY caches whose
+    * relations read files under `dir` (`recacheByPath`): without this, a
+    * cached frame built over the old contents — not necessarily one a
+    * memo knows about — would keep serving stale blocks to any
+    * canonically-equal subplan, and the memo rebuild itself could read
+    * it, so a refreshed corpus could pair with a stale frozen artifact.
+    */
+  def evictArtifacts(spark: SparkSession, dir: String): Int = {
+    org.apache.spark.sql.GraftBridge.recacheByPath(spark, dir)
+    var n = 0
+    artifactMemos.forEach(m => n += m.evict(spark, dir))
     n
   }
 

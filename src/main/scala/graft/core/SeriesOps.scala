@@ -72,15 +72,9 @@ object SeriesOps {
     * per occupied second) and evicted with the session.
     */
   def series(spark: SparkSession, dir: String): DataFrame =
-    seriesCache.computeIfAbsent((spark, dir), { _ =>
-      Caches.sanction(
-        buildSeries(spark, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    seriesMemo((spark, dir))(buildSeries(spark, dir))
 
-  private val seriesCache =
-    Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val seriesMemo = new Caches.ArtifactMemo[(SparkSession, String), DataFrame]
 
   /** The non-materialized derivation: predicates push through the slot
     * aggregation into the raw events parquet scan. Use when scanning a

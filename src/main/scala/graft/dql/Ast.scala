@@ -15,9 +15,7 @@ object Ast {
   /** `'a'.'b' BUCKET 'bkt'` — direct series scan; a `*` part makes it a
     * glob scan (sget, `src/dql_parser.yrl:239-244`).
     */
-  final case class Get(path: Seq[String], bucket: String) extends Expr {
-    def isGlob: Boolean = path.contains("*")
-  }
+  final case class Get(path: Seq[String], bucket: String) extends Expr
 
   /** `<metric|ALL> FROM <collection> [WHERE tags] [GROUP BY $tags USING f]`
     * (`src/dql_parser.yrl:264-274`, `:252-262`).

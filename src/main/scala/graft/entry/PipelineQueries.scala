@@ -2,6 +2,7 @@ package graft.entry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Caches.ArtifactMemo
 import graft.core.Tables
 import graft.pipeline._
 
@@ -37,16 +38,11 @@ object PipelineQueries extends QueryProvider {
     * series table (SeriesOps.series): first consumer pays, the rest read
     * the persisted frame.
     */
-  private val pairsCache = graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double), DataFrame]())
+  private val pairsMemo =
+    new ArtifactMemo[(SparkSession, String, Double), DataFrame]
   private def minhashPairs(s: SparkSession, d: String,
                            threshold: Double): DataFrame =
-    pairsCache.computeIfAbsent((s, d, threshold), { _ =>
-      graft.core.Caches.sanction(
-        Dedup.minhashPairs(docs(s, d), threshold)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    pairsMemo((s, d, threshold))(Dedup.minhashPairs(docs(s, d), threshold))
 
   /** FROZEN BPE merge tables per (session, dir, train-subset, k) — the
     * tokenizer's shipped artifact, trained once on the refresh cadence
@@ -55,20 +51,19 @@ object PipelineQueries extends QueryProvider {
     * distinguishes the full-corpus table (merges/tokens) from the
     * held-out trainer (encode's doc_id % 5 =!= 0 split).
     */
-  private val bpeRulesCache = graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String, Int), Seq[(String, String, Long)]]())
+  private val bpeRulesMemo = new ArtifactMemo[
+    (SparkSession, String, String, Int), Seq[(String, String, Long)]]
 
   private[entry] def bpeRules(s: SparkSession, d: String, trainPred: String,
                               k: Int): Seq[(String, String, Long)] =
-    bpeRulesCache.computeIfAbsent((s, d, trainPred, k), { _ =>
+    bpeRulesMemo((s, d, trainPred, k)) {
       val dw = docsWide(s, d)
       val train = trainPred match {
         case "all" => dw
         case "mod5" => dw.where(col("doc_id") % 5 =!= 0)
       }
       Bpe.trainedRulesCounted(train, k)
-    })
+    }
 
   /** FROZEN quality-classifier weights per (session, dir, channel set,
     * training scope, hyperparams) — the deployed-filter posture the BPE
@@ -88,29 +83,28 @@ object PipelineQueries extends QueryProvider {
     * "all" (full corpus) or "train" (the train side of the
     * deterministic hash split at `valFrac`).
     */
-  private val clsWeightsCache = graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String, String, Int, Int, Double, Int,
-        Double), Array[Double]]())
+  private val clsWeightsMemo = new ArtifactMemo[
+    (SparkSession, String, String, String, Int, Int, Double, Int, Double),
+    Array[Double]]
 
   private def clsWeights(s: SparkSession, d: String, channel: String,
                          scope: String, dim: Int, rounds: Int, lr: Double,
                          minWords: Int,
                          valFrac: Double = 0.0): Array[Double] =
-    clsWeightsCache.computeIfAbsent(
-      (s, d, channel, scope, dim, rounds, lr, minWords, valFrac), { _ =>
-        val corpus = scope match {
-          case "all" => docs(s, d)
-          case "train" => Curation.onSplit(docs(s, d), valFrac, "train")
-        }
-        (channel match {
-          case "uni" =>
-            Classifier.trainWeights(corpus, dim, rounds, lr, minWords)
-          case "bi" =>
-            Classifier.trainWeightsBigram(corpus, dim, dim, rounds, lr,
-              minWords)
-        }).map(_.doubleValue)
-      })
+    clsWeightsMemo((s, d, channel, scope, dim, rounds, lr, minWords,
+      valFrac)) {
+      val corpus = scope match {
+        case "all" => docs(s, d)
+        case "train" => Curation.onSplit(docs(s, d), valFrac, "train")
+      }
+      (channel match {
+        case "uni" =>
+          Classifier.trainWeights(corpus, dim, rounds, lr, minWords)
+        case "bi" =>
+          Classifier.trainWeightsBigram(corpus, dim, dim, rounds, lr,
+            minWords)
+      }).map(_.doubleValue)
+    }
 
   /** held-out val-split scoring scan against the frozen "train"-scope
     * weights — shared by the four curate_classifier_val* gates

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{Exact, SeriesOps}
+import graft.core.Caches.ArtifactMemo
 import graft.streaming.{DocStream, StreamingDql}
 
 /** Correctness gates for the streaming engines (SURVEY §2.10 /
@@ -74,7 +75,7 @@ import graft.streaming.{DocStream, StreamingDql}
   * task pays a state-store delta-file commit per partition per batch,
   * and AvailableNow replaces the processAllAvailable poll/stop cycle
   * with a self-terminating run), and another ~25–35% at 4→2 (r20
-  * Scratch A/B over 15 gates, warm runs: e.g. stream_derivate 2.8 vs
+  * A/B over 15 gates, warm runs: e.g. stream_derivate 2.8 vs
   * 6.7 s, stream_hist 1.75 vs 3.3 s, stream_active 2.0 vs 3.3 s —
   * consistent on both the light DQL gates and the compute-carrying
   * doc-stream gates; 2→1 measured MIXED, the no-data output batch of
@@ -86,9 +87,9 @@ import graft.streaming.{DocStream, StreamingDql}
   * compilation under the bench's cold-plan discipline, not harness
   * provisioning.
   *
-  * Where the residual steady floor lives (r19 attribution, via the
-  * `SPARK_GRAFT_STREAM_PROGRESS` per-batch diagnostic in [[drain]] and
-  * the r18 detail artifact): per stream gate, only ~45 ms is query
+  * Where the residual steady floor lives (r19 attribution, from the
+  * per-batch `StreamingQueryProgress.durationMs` of each gate and the r18
+  * detail artifact): per stream gate, only ~45 ms is query
   * start/stop/checkpoint management (the `provision_ms` column — so a
   * shared long-lived query per family, the obvious-looking fix, would
   * reclaim almost nothing), and executor task time is ~17% of wall; the
@@ -430,9 +431,8 @@ object StreamQueries extends QueryProvider {
     * retains every result row on the driver, which is exactly right for a
     * bounded replay whose rows the oracle compare reads back (and prior
     * tables are dropped above), and exactly wrong for an unbounded
-    * stream — production pipelines write the `noop`/file/Kafka sinks
-    * (see Scratch's rehearsal drains). Don't copy this into a real
-    * pipeline.
+    * stream — production pipelines write the `noop`/file/Kafka sinks.
+    * Don't copy this into a real pipeline.
     */
   private val liveTables =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -501,12 +501,10 @@ object StreamQueries extends QueryProvider {
         }
         val name = s"graft_stream_gate_${runSeq.incrementAndGet()}"
         val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        // replay state-store partitioning, conf-first (default 2 — see
-        // the class doc's 32→8→4→2 measurement chain); captured at query
-        // start, rides with the query for its lifetime
-        s.conf.set("spark.sql.shuffle.partitions",
-          s.conf.getOption("spark.graft.stream.replay.partitions")
-            .getOrElse("2"))
+        // replay state-store partitioning: 2 (see the class doc's
+        // 32→8→4→2 measurement chain); captured at query start, rides
+        // with the query for its lifetime
+        s.conf.set("spark.sql.shuffle.partitions", "2")
         try out.writeStream.format("memory").queryName(name)
           .option("checkpointLocation", ckpt.toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -520,29 +518,6 @@ object StreamQueries extends QueryProvider {
       }
     try q.awaitTermination()
     finally graft.core.Provisioning.timed {
-      // opt-in micro-batch forensics (dev only): per-batch row counts and
-      // the driver-side duration split (triggerExecution, queryPlanning,
-      // addBatch, walCommit, …) — the evidence for where a replay gate's
-      // wall time actually goes (r18: 83% of stream wall was NOT task
-      // time; this attributes it batch by batch)
-      // the dev-only diagnostics must never leak the query or the
-      // checkpoint dir: if explain/progress throws (e.g. the query
-      // already terminated under AvailableNow), q.stop() and the
-      // checkpoint cleanup below still have to run (r20 advice)
-      try {
-        if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS"))
-          q.recentProgress.foreach { p =>
-            System.err.println(s"[stream-progress] gate-batch id=${p.batchId} " +
-              s"rows=${p.numInputRows} durations=${p.durationMs}")
-          }
-        // opt-in plan capture (dev only): the last micro-batch's executed
-        // plan — the only way to see a stream gate's physical plan, since
-        // the gate function returns the already-drained sink table
-        if (sys.env.contains("SPARK_GRAFT_STREAM_EXPLAIN")) q.explain(true)
-      } catch { case t: Throwable =>
-        System.err.println(
-          s"[stream] dev diagnostics failed: ${t.getClass.getSimpleName}")
-      }
       q.stop()
       rmQuiet(ckpt)
     }
@@ -616,11 +591,10 @@ object StreamQueries extends QueryProvider {
     drain(s, out, "append").distinct()
   }
 
-  /** The corpus band index, memoized + persisted per (session, dir) and
-    * SANCTIONED like the series table and the minhash pair set: in
-    * production it IS a materialized artifact (the operator doc says so —
-    * a batch-refreshed table the firehose probes), so its one-off build is
-    * storage provisioning, not probe cost.
+  /** The corpus band index artifact: in production it IS a materialized
+    * table (the operator doc says so — a batch-refreshed table the
+    * firehose probes), so its one-off build is storage provisioning, not
+    * probe cost.
     */
   // delegates to the shared (session, corpus)-keyed artifact in
   // DqlArtifacts (r17): the streaming DQL registry's dedup_minhash
@@ -630,20 +604,15 @@ object StreamQueries extends QueryProvider {
     graft.dql.DqlArtifacts.bandIndex(s, new graft.dql.TestdataStore(dir))
 
   /** band index over the EVAL split only — the fuzzy-decon probe target,
-    * memoized + sanctioned like [[nearDupIndex]] (in production the eval
-    * suite's index is a tiny batch-refreshed artifact)
+    * an artifact like [[nearDupIndex]] (in production the eval suite's
+    * index is a tiny batch-refreshed artifact)
     */
-  private val evalIndexCache =
-    graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val evalIndexMemo = new ArtifactMemo[(SparkSession, String), DataFrame]
   private def evalBandIndex(s: SparkSession, dir: String): DataFrame =
-    evalIndexCache.computeIfAbsent((s, dir), { _ =>
-      graft.core.Caches.sanction(
-        graft.pipeline.Dedup.bandIndex(
-          graft.core.Tables(s, dir, "documents")
-            .where(col("doc_id") % 5 === 0))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    evalIndexMemo((s, dir)) {
+      graft.pipeline.Dedup.bandIndex(
+        graft.core.Tables(s, dir, "documents").where(col("doc_id") % 5 === 0))
+    }
 
   /** DQL pipeline registry on the firehose (r16 verdict #5): the DQL
     * TEXT compiled onto the document replay via
@@ -675,19 +644,12 @@ object StreamQueries extends QueryProvider {
     * starts emit the moment the document lands. Stateless stream-static
     * equi-join, append mode; oracle = the batch hit set.
     */
-  /** The corpus duplicated-gram artifact, memoized + persisted per
-    * (session, dir) and SANCTIONED like the band index: both span gates'
-    * docs say "batch-refreshed like the near-dup band index", and that is
-    * what production does — the stream-static side must not re-derive the
-    * corpus-wide count per micro-batch (it dominated stream_scrub's CPU:
-    * ~11 s·32 of the 2.5 s wall was rebuilding the artifact).
-    *
-    * Invalidation: every memo here is registered with
-    * [[graft.core.Caches.registerArtifactCache]] — a caller that
-    * regenerates the tables under `dir` calls
-    * `Caches.evictArtifacts(session, dir)` and the next consumer
-    * rebuilds from current storage (r14 advisory: no refreshed corpus
-    * may pair with a stale frozen artifact).
+  /** The corpus duplicated-gram artifact, like the band index: both span
+    * gates' docs say "batch-refreshed like the near-dup band index", and
+    * that is what production does — the stream-static side must not
+    * re-derive the corpus-wide count per micro-batch (it dominated
+    * stream_scrub's CPU: ~11 s·32 of the 2.5 s wall was rebuilding the
+    * artifact).
     */
   // delegates to the shared (session, corpus, n)-keyed artifact in
   // DqlArtifacts (r17): the streaming DQL registry's scrub spelling
@@ -710,7 +672,7 @@ object StreamQueries extends QueryProvider {
       dupGramsArtifact(s, dir), 8), "update")
 
   /** the keep-first artifact — duplicated hashes WITH their packed
-    * canonical keys — memoized + sanctioned like [[dupGramsArtifact]]
+    * canonical keys — an artifact like [[dupGramsArtifact]]
     */
   private def dupCanonArtifact(s: SparkSession, dir: String): DataFrame =
     graft.dql.DqlArtifacts.dupGramsCanon(s,
@@ -761,21 +723,16 @@ object StreamQueries extends QueryProvider {
     }
   } }
 
-  /** The packed IVF index (+ centroid row), memoized + sanctioned per
-    * (session, dir) — the materialized artifact an online-retrieval
-    * service probes.
+  /** The packed IVF index (+ centroid row) per (session, dir) — the
+    * materialized artifact an online-retrieval service probes.
     */
-  private val simIndexCache = graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]())
+  private val simIndexMemo =
+    new ArtifactMemo[(SparkSession, String), (DataFrame, DataFrame)]
   private def simIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    simIndexCache.computeIfAbsent((s, dir), { _ =>
-      val (packed, cents) = graft.streaming.SimStream.ivfIndex(
+    simIndexMemo((s, dir)) {
+      graft.streaming.SimStream.ivfIndex(
         graft.core.Tables(s, dir, "embeddings"), nCells = 8)
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      (graft.core.Caches.sanction(packed.persist(lvl)),
-        graft.core.Caches.sanction(cents.persist(lvl)))
-    })
+    }
 
   /** Online hybrid retrieval: each arriving query probes BOTH the IVF
     * cell index and the LSH bucket index, ranks each list in-row, and
@@ -796,30 +753,24 @@ object StreamQueries extends QueryProvider {
 
   /** 6-bit packed bucket index for the hybrid gate (the radius gate's
     * [[lshIdx]] uses 4 bits — different recall point, separate
-    * sanctioned artifact).
+    * artifact).
     */
-  private val lshIdx6Cache = graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val lshIdx6Memo = new ArtifactMemo[(SparkSession, String), DataFrame]
   private def lshIdx6(s: SparkSession, dir: String): DataFrame =
-    lshIdx6Cache.computeIfAbsent((s, dir), { _ =>
-      graft.core.Caches.sanction(graft.streaming.SimStream.lshIndex(
+    lshIdx6Memo((s, dir)) {
+      graft.streaming.SimStream.lshIndex(
         graft.core.Tables(s, dir, "embeddings"), bits = 6, dim = Dim)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    }
 
-  /** The packed LSH bucket index, memoized + sanctioned per
-    * (session, dir) — the static side of the online radius search.
+  /** The packed LSH bucket index per (session, dir) — the static side of
+    * the online radius search.
     */
-  private val lshIndexCache = graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]())
+  private val lshIndexMemo = new ArtifactMemo[(SparkSession, String), DataFrame]
   private def lshIdx(s: SparkSession, dir: String): DataFrame =
-    lshIndexCache.computeIfAbsent((s, dir), { _ =>
-      graft.core.Caches.sanction(graft.streaming.SimStream.lshIndex(
+    lshIndexMemo((s, dir)) {
+      graft.streaming.SimStream.lshIndex(
         graft.core.Tables(s, dir, "embeddings"), bits = 4, dim = Dim)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    }
 
   /** Online radius search: arriving queries probe the packed bucket
     * index; every corpus vector with cosine ≥ the threshold streams out
@@ -847,23 +798,22 @@ object StreamQueries extends QueryProvider {
     drain(s, graft.pipeline.Similarity.dimStats(emb), "complete")
   }
 
-  /** The frozen PCA artifacts (per-dim mean row + 3-step top component),
-    * memoized + sanctioned per (session, dir) — the batch-refreshed pair
-    * the online projector scores against.
+  /** The frozen PCA artifacts (per-dim mean row + 3-step top component)
+    * per (session, dir) — the batch-refreshed pair the online projector
+    * scores against.
     */
-  private val pcaCache = graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]())
+  private val pcaMemo =
+    new ArtifactMemo[(SparkSession, String), (DataFrame, DataFrame)]
   private def pcaArtifacts(s: SparkSession,
                            dir: String): (DataFrame, DataFrame) =
-    pcaCache.computeIfAbsent((s, dir), { _ =>
+    pcaMemo((s, dir)) {
       val emb = graft.core.Tables(s, dir, "embeddings")
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      (graft.core.Caches.sanction(
-        graft.pipeline.Pca.meanRow(emb).persist(lvl)),
-        graft.core.Caches.sanction(
-          graft.pipeline.Pca.topComponentRow(emb, Dim, 3).persist(lvl)))
-    })
+      // persisted first: the component trainer's eager mean job then
+      // fills this cache instead of computing the mean a second time
+      val mean = graft.pipeline.Pca.meanRow(emb)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (mean, graft.pipeline.Pca.topComponentRow(emb, Dim, 3))
+    }
 
   /** Online PCA projection/residual: each arriving vector scores
     * row-locally against the frozen (mean, component) broadcasts —
@@ -878,17 +828,13 @@ object StreamQueries extends QueryProvider {
     drain(s, graft.pipeline.Pca.project(emb, m, v), "append")
   }
 
-  private val sq8IndexCache = graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]())
+  private val sq8IndexMemo =
+    new ArtifactMemo[(SparkSession, String), (DataFrame, DataFrame)]
   private def sq8Index(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    sq8IndexCache.computeIfAbsent((s, dir), { _ =>
-      val (packed, cents) = graft.streaming.SimStream.sq8Index(
+    sq8IndexMemo((s, dir)) {
+      graft.streaming.SimStream.sq8Index(
         graft.core.Tables(s, dir, "embeddings"), nCells = 8)
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      (graft.core.Caches.sanction(packed.persist(lvl)),
-        graft.core.Caches.sanction(cents.persist(lvl)))
-    })
+    }
 
   /** Online quantized ANN gate: same replay, searched against the SQ8
     * packed index — results must match the batch quantized-only ranking
@@ -911,35 +857,25 @@ object StreamQueries extends QueryProvider {
     drain(s, out, "append")
   }
 
-  private val pqIndexCache = graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame)]())
+  private val pqIndexMemo = new ArtifactMemo[(SparkSession, String),
+    (DataFrame, DataFrame, DataFrame)]
   private def pqIndex(s: SparkSession,
                       dir: String): (DataFrame, DataFrame, DataFrame) =
-    pqIndexCache.computeIfAbsent((s, dir), { _ =>
-      val (packed, cents, cbs) = graft.streaming.SimStream.pqIndex(
+    pqIndexMemo((s, dir)) {
+      graft.streaming.SimStream.pqIndex(
         graft.core.Tables(s, dir, "embeddings"), nCells = 8, m = 8,
         ksub = 16, dim = Dim)
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      (graft.core.Caches.sanction(packed.persist(lvl)),
-        graft.core.Caches.sanction(cents.persist(lvl)),
-        graft.core.Caches.sanction(cbs.persist(lvl)))
-    })
+    }
 
-  private val resPqIndexCache = graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame)]())
+  private val resPqIndexMemo = new ArtifactMemo[(SparkSession, String),
+    (DataFrame, DataFrame, DataFrame)]
   private def resPqIndex(s: SparkSession,
                          dir: String): (DataFrame, DataFrame, DataFrame) =
-    resPqIndexCache.computeIfAbsent((s, dir), { _ =>
-      val (packed, cents, scbL) = graft.streaming.SimStream.residualPqIndex(
+    resPqIndexMemo((s, dir)) {
+      graft.streaming.SimStream.residualPqIndex(
         graft.core.Tables(s, dir, "embeddings"), nCells = 8, m = 8,
         ksub = 16, dim = Dim)
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      (graft.core.Caches.sanction(packed.persist(lvl)),
-        graft.core.Caches.sanction(cents.persist(lvl)),
-        graft.core.Caches.sanction(scbL.persist(lvl)))
-    })
+    }
 
   /** Online residual-PQ (IVFADC) ANN gate: same replay, searched against
     * the residual codes-only index with per-(query, cell) ADC tables —
@@ -965,25 +901,18 @@ object StreamQueries extends QueryProvider {
   }
 
   /** The TRAINED online IVFADC index (Lloyd-trained residual
-    * codebooks), memoized + sanctioned — same artifact schema as
-    * [[resPqIndex]], so the search kernels consume it unmodified.
+    * codebooks) — same artifact schema as [[resPqIndex]], so the search
+    * kernels consume it unmodified.
     */
-  private val resPqTrainedIndexCache =
-    graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame, DataFrame)]())
+  private val resPqTrainedIndexMemo = new ArtifactMemo[(SparkSession, String),
+    (DataFrame, DataFrame, DataFrame)]
   private def resPqTrainedIndex(s: SparkSession,
                                 dir: String): (DataFrame, DataFrame, DataFrame) =
-    resPqTrainedIndexCache.computeIfAbsent((s, dir), { _ =>
-      val (packed, cents, scbL) =
-        graft.streaming.SimStream.residualPqIndexTrained(
-          graft.core.Tables(s, dir, "embeddings"), nCells = 8, m = 8,
-          ksub = 16, dim = Dim, iters = 2)
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      (graft.core.Caches.sanction(packed.persist(lvl)),
-        graft.core.Caches.sanction(cents.persist(lvl)),
-        graft.core.Caches.sanction(scbL.persist(lvl)))
-    })
+    resPqTrainedIndexMemo((s, dir)) {
+      graft.streaming.SimStream.residualPqIndexTrained(
+        graft.core.Tables(s, dir, "embeddings"), nCells = 8, m = 8,
+        ksub = 16, dim = Dim, iters = 2)
+    }
 
   /** Online trained-IVFADC gate: the probed residual search over the
     * Lloyd-trained index — results ≡ the batch trained search, whose
@@ -1197,17 +1126,14 @@ object StreamQueries extends QueryProvider {
     * it row-locally. Scoring the replayed corpus keeps the batch
     * train-score oracle verbatim.
     */
-  private val clfCache =
-    graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      Array[Double]]())
+  private val clfMemo = new ArtifactMemo[(SparkSession, String), Array[Double]]
   private def clfWeights(s: SparkSession, dir: String): Array[Double] =
-    clfCache.computeIfAbsent((s, dir), { _ =>
+    clfMemo((s, dir)) {
       graft.pipeline.Classifier.trainWeights(
         graft.core.Tables(s, dir, "documents"),
         dim = 32, rounds = 10, lr = 0.001, minWords = 55)
         .map(_.doubleValue)
-    })
+    }
 
   /** Online learned-quality gate: each arriving document scored against
     * the frozen classifier — row-local margin + sigmoid against literal
@@ -1217,22 +1143,17 @@ object StreamQueries extends QueryProvider {
     drain(s, graft.pipeline.Classifier.scoreWith(docStream(s, dir),
       dim = 32, minWords = 55, clfWeights(s, dir)), "append")
 
-  /** The frozen unigram LM, memoized + sanctioned per (session, dir) —
-    * the CCNet posture: the model is trained (counted) once on the
+  /** The frozen unigram LM per (session, dir) — the CCNet posture: the model is trained (counted) once on the
     * reference corpus, then the firehose is scored against it via a
     * stream-static join. Scoring the SAME corpus keeps every token
     * in-vocabulary, so the batch self-scored oracle applies verbatim.
     */
-  private val lmCache =
-    graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val lmMemo = new ArtifactMemo[(SparkSession, String), DataFrame]
   private def unigramLm(s: SparkSession, dir: String): DataFrame =
-    lmCache.computeIfAbsent((s, dir), { _ =>
-      graft.core.Caches.sanction(
-        graft.pipeline.TextOps.unigramModel(
-          graft.core.Tables(s, dir, "documents"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    lmMemo((s, dir)) {
+      graft.pipeline.TextOps.unigramModel(
+        graft.core.Tables(s, dir, "documents"))
+    }
 
   /** Streaming LM-quality gate: per-arriving-document mean unigram
     * log-prob against the frozen model. The token re-group keys on
@@ -1245,20 +1166,16 @@ object StreamQueries extends QueryProvider {
       docStream(s, dir).select("doc_id", "text"),
       unigramLm(s, dir)), "update")
 
-  /** The frozen per-language tercile cut table, memoized + sanctioned
-    * per (session, dir) — batch-refreshed beside the LM, exactly
-    * CCNet's cutoff files.
+  /** The frozen per-language tercile cut table per (session, dir) —
+    * batch-refreshed beside the LM, exactly CCNet's cutoff files.
     */
-  private val pplCutsCache =
-    graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val pplCutsMemo = new ArtifactMemo[(SparkSession, String), DataFrame]
   private def pplCutsTable(s: SparkSession, dir: String): DataFrame =
-    pplCutsCache.computeIfAbsent((s, dir), { _ =>
+    pplCutsMemo((s, dir)) {
       val dd = graft.core.Tables(s, dir, "documents")
-      graft.core.Caches.sanction(graft.pipeline.Curation.pplCuts(dd,
+      graft.pipeline.Curation.pplCuts(dd,
         graft.pipeline.TextOps.unigramLogProb(dd, unigramLm(s, dir)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    }
 
   /** Online CCNet bucketing: arriving documents scored against the
     * frozen LM and labeled against the frozen cuts — self-scored on the
@@ -1270,27 +1187,21 @@ object StreamQueries extends QueryProvider {
       unigramLm(s, dir), pplCutsTable(s, dir)), "update")
 
   /** Frozen TF-IDF corpus statistics (per-term document frequency +
-    * corpus size), memoized + sanctioned per (session, dir) — the
-    * batch-refreshed artifact the online keyword extractor scores
+    * corpus size) per (session, dir) — the batch-refreshed artifact the online keyword extractor scores
     * against, beside the LM and the cut table.
     */
-  private val tfidfStatsCache =
-    graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame)]())
+  private val tfidfStatsMemo =
+    new ArtifactMemo[(SparkSession, String), (DataFrame, DataFrame)]
   private def tfidfStats(s: SparkSession,
                          dir: String): (DataFrame, DataFrame) =
-    tfidfStatsCache.computeIfAbsent((s, dir), { _ =>
+    tfidfStatsMemo((s, dir)) {
       val dd = graft.core.Tables(s, dir, "documents")
       val tf = graft.pipeline.Dedup.withWords(dd)
         .select(col("doc_id"), explode(col("w")).as("word"))
         .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      val dfreq = tf.groupBy("word").agg(count(lit(1)).as("df"))
-      val n = dd.agg(count(lit(1)).as("n_docs"))
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      (graft.core.Caches.sanction(dfreq.persist(lvl)),
-        graft.core.Caches.sanction(n.persist(lvl)))
-    })
+      (tf.groupBy("word").agg(count(lit(1)).as("df")),
+        dd.agg(count(lit(1)).as("n_docs")))
+    }
 
   /** Online TF-IDF keyword extraction: arriving docs scored against the
     * frozen df table — self-scored on the replay corpus, so the batch
@@ -1304,20 +1215,15 @@ object StreamQueries extends QueryProvider {
   }
 
   /** The frozen DSIR log-ratio row (64-bucket hashed-unigram importance
-    * table toward the English target), memoized + sanctioned per
-    * (session, dir) — batch-refreshed beside the LM/cuts/df artifacts.
+    * table toward the English target) per (session, dir) —
+    * batch-refreshed beside the LM/cuts/df artifacts.
     */
-  private val dsirRsCache =
-    graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]())
+  private val dsirRsMemo = new ArtifactMemo[(SparkSession, String), DataFrame]
   private def dsirRatios(s: SparkSession, dir: String): DataFrame =
-    dsirRsCache.computeIfAbsent((s, dir), { _ =>
-      graft.core.Caches.sanction(graft.pipeline.Dsir.ratioRow(
-        graft.pipeline.Dsir.logRatios(
-          graft.core.Tables(s, dir, "documents"), 64,
-          col("lang") === "en"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    dsirRsMemo((s, dir)) {
+      graft.pipeline.Dsir.ratioRow(graft.pipeline.Dsir.logRatios(
+        graft.core.Tables(s, dir, "documents"), 64, col("lang") === "en"))
+    }
 
   /** Online per-source quota admission: first-arrival counter state, two
     * longs per source; the doc_id-ordered replay makes the row_number
@@ -1537,15 +1443,13 @@ object StreamQueries extends QueryProvider {
     * eval-set-broadcast class of driver access: a live board scores
     * recency against a batch-refreshed frontier, not a wall clock.
     */
-  private val rfmNowCache =
-    graft.core.Caches.registerArtifactCache(
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]())
+  private val rfmNowMemo = new ArtifactMemo[(SparkSession, String), java.lang.Long]
   private def rfmNow(s: SparkSession, dir: String): Long =
-    rfmNowCache.computeIfAbsent((s, dir), { _ =>
+    rfmNowMemo((s, dir)) {
       java.lang.Long.valueOf(graft.core.SeriesOps.events(s, dir)
         .where(col("event_type") === "purchase")
         .agg(max(col("ts_ms"))).head().getLong(0))
-    }).longValue
+    }.longValue
 
   /** Online RFM board gate: complete-mode per-user moments against the
     * frozen frontier; the final board ≡ the batch rfm oracle verbatim.

@@ -173,43 +173,15 @@ object Dedup {
     Persist.handoff(out, pairs, mel, shp)
   }
 
-  /** Banded-minhash candidate pairs over any (doc_id, shingle) table:
-    * Seeds md5s per shingle split into Channels independent 8-hex-char
-    * channels, per-doc channel minima grouped into Bands bands of Channels
-    * rows, candidates share ≥1 band. Shared by the 3-shingle minhash dedup
-    * and the bigram n-gram dedup — blocking is a function of content
-    * sketch, never of position (prefix keys collapse boilerplate-prefixed
-    * corpora into one quadratic block).
-    */
-  private def signature(sh: DataFrame): DataFrame = {
-    val hashed = sh.select(col("doc_id") +:
-      (0 until Seeds).map(s =>
-        md5(concat_ws("|", lit(s.toString), col("shingle"))).as(s"h$s")): _*)
-    // channels aggregate as LONGS, not 8-hex-char strings: a string agg
-    // buffer is not UnsafeRow-mutable, so min(substring(...)) demoted
-    // this groupBy — the biggest aggregation of the whole dedup family,
-    // over the corpus-sized shingle table — to SortAggregate (caught by
-    // PlanAudit.sortAggDemotions, r16). Fixed-width lowercase hex orders
-    // lexicographically exactly as its numeric value, so min-over-long
-    // picks the same channel; consumers re-encode with lpad(lower(hex))
-    // to recover the identical hex string (band keys unchanged). The
-    // parse is the native [[graft.expr.HexSliceLong]] kernel — `conv`'s
-    // generic radix machinery measured ~35% of the stage's CPU at 10×.
-    def chan(s: Int, c: Int) =
-      graft.expr.HexSliceLong(col(s"h$s"), c * 8, 8)
-    val mhAggs = for (s <- 0 until Seeds; c <- 0 until Channels)
-      yield min(chan(s, c)).as(s"mh${s}_$c")
-    hashed.groupBy("doc_id").agg(mhAggs.head, mhAggs.tail: _*)
-  }
-
   /** the minhash channel back in its original 8-hex-char form */
   private def mhHex(c: Column): Column = lpad(lower(hex(c)), 8, "0")
 
   /** The signature computed ROW-LOCALLY per document — one scan, zero
     * exchange, no shingle explode: the native [[graft.expr
     * .MinhashChannels]] kernel emits all Seeds×Channels minima in one
-    * pass per doc (bit-identical to [[signature]] over the same text —
-    * MinhashChannelsSpec fuzzes the equality). The per-doc signature is
+    * pass per doc (bit-identical to the composed explode → md5 → per-doc
+    * min signature over the same text — MinhashChannelsSpec fuzzes the
+    * equality). The per-doc signature is
     * a pure function of the doc's own shingles, so at 100 TB this turns
     * the candidate build's signature stage from
     * explode→hash→aggregate→shuffle into a projection. The
@@ -229,14 +201,6 @@ object Dedup {
           yield element_at(col("mh"), sd * Channels + c + 1)
             .as(s"mh${sd}_$c")): _*)
   }
-
-  /** profiling-only view of the bigram signature stage (Scratch) */
-  def ngramSignatureForProfile(docs: DataFrame): DataFrame =
-    signature(shingles2(docs))
-
-  /** profiling-only view of the 3-shingle signature stage (Prof) */
-  def signatureForProfile(docs: DataFrame): DataFrame =
-    signature(shingles3(docs))
 
   /** The static near-dup INDEX for a corpus: one row per (doc, band) with
     * the banded minhash key and the doc's distinct shingle set —
@@ -636,35 +600,6 @@ object Dedup {
     val (pairs, mel) = bandedCandidates(signatureRowLocal(docs, 2))
     val (out, shp) = verifyJaccard(pairs, docs, 2, threshold)
     Persist.handoff(out, pairs, mel, shp)
-  }
-
-  /** profiling-only view of the bigram candidate stage (Scratch); the
-    * candidate and band-key frames are self-persisted, so register both
-    * for release too
-    */
-  def ngramCandidatesForProfile(docs: DataFrame): DataFrame = {
-    val (p, mel) = bandedCandidates(signatureRowLocal(docs, 2))
-    Persist.handoff(p, p, mel)
-  }
-
-  /** profiling-only view of the pinned band-key frame (Scratch) */
-  def ngramMeltedForProfile(docs: DataFrame): DataFrame = {
-    val (p, mel) = bandedCandidates(signatureRowLocal(docs, 2))
-    Persist.handoff(mel, p, mel)
-  }
-
-  /** profiling-only view of the simhash combination-block keys
-    * (doc_id, band_idx, bv) — for measuring block occupancy (Scratch)
-    */
-  def simhashBlocksForProfile(docs: DataFrame): DataFrame = {
-    val fp = simhash(docs)
-    val chunkExprs = SimhashChunks.map { case (n, e) => s"$e AS $n" }
-    val chunked = fp.selectExpr(
-      Seq("doc_id", "fp_hi", "fp_lo") ++ chunkExprs: _*)
-    val stackArgs = SimhashCombos.zipWithIndex
-      .map { case (c, i) => s"$i, ${comboKey(c)}" }.mkString(", ")
-    chunked.selectExpr("doc_id",
-      s"stack(${SimhashCombos.length}, $stackArgs) as (band_idx, bv)")
   }
 
   /** raw (doc_id, shingle) occurrences of word bigrams (see [[shingles3]]

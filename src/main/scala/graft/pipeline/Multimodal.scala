@@ -31,12 +31,6 @@ object Multimodal {
   /** raw media row: opaque payload + source id */
   final case class MediaRow(doc_id: Long, payload: Array[Byte])
 
-  /** documents → media frame with a real `binary` payload column (UTF-8
-    * bytes of the text stand in for image bytes).
-    */
-  def asMedia(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-
   /** Valid binary P6 PPM images rendered from document bytes — the media
     * fixture: `P6\n<w> <h>\n255\n` + the leading w·h·3 text bytes as the
     * RGB raster, with w = h = min(16, ⌊√(n div 3)⌋) so the raster always

@@ -16,9 +16,9 @@ import graft.core.Caches
   * `Caches.releaseTransient` — per query in the bench loop, per dump in
   * Verify, or by the embedding application when it wants storage back.
   *
-  * Results are NOT persisted here. Call sites whose result is a
-  * session-lifetime materialized artifact (the minhash pair set) persist
-  * and `Caches.sanction` it themselves.
+  * Results are NOT persisted here. A result that is a session-lifetime
+  * materialized artifact (the minhash pair set) is built through a
+  * [[graft.core.Caches.ArtifactMemo]], which persists and sanctions it.
   */
 private[pipeline] object Persist {
   def handoff(result: DataFrame, release: DataFrame*): DataFrame = {

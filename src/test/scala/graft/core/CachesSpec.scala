@@ -1,13 +1,14 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** The artifact-memo eviction hook (r14 advisory): registered
-  * (session, dir)-keyed memo caches must drop — and unpersist — exactly
-  * the entries scoped to the refreshed dir, so a regenerated corpus can
-  * never pair with a stale frozen artifact.
+/** The artifact memo: a build persists and sanctions the frames its
+  * value carries, and the eviction hook (r14 advisory) must drop — and
+  * unpersist — exactly the entries scoped to the refreshed dir, so a
+  * regenerated corpus can never pair with a stale frozen artifact.
   */
 class CachesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
@@ -25,40 +26,77 @@ class CachesSpec extends AnyFunSuite with BeforeAndAfterAll {
     "unpersisting frames wherever the value carries them") {
     val s = spark
     import s.implicits._
-    val cache = Caches.registerArtifactCache(
-      new java.util.concurrent.ConcurrentHashMap[
-        (SparkSession, String), Any]())
-    val tupleCache = Caches.registerArtifactCache(
-      new java.util.concurrent.ConcurrentHashMap[
-        (SparkSession, String, Double), Any]())
-    val a = Seq(1, 2).toDF("x").persist()
-    val b = Seq(3).toDF("y").persist()
-    val c = Seq(4).toDF("z").persist()
-    a.count(); b.count(); c.count()
-    cache.put((s, "/data/v1"), a)
-    cache.put((s, "/data/KEEP"), b)
+    val cache = new Caches.ArtifactMemo[(SparkSession, String), Any]
+    val tupleCache = new Caches.ArtifactMemo[(SparkSession, String, Double), Any]
+    val a = Seq(1, 2).toDF("x")
+    val b = Seq(3).toDF("y")
+    val c = Seq(4).toDF("z")
+    cache((s, "/data/v1"))(a)
+    cache((s, "/data/KEEP"))(b)
     // value carrying the frame inside a product (index, meta) pair
-    tupleCache.put((s, "/data/v1", 0.5), (c, 42))
+    tupleCache((s, "/data/v1", 0.5))((c, 42))
+    a.count(); b.count(); c.count()
     // SUB-CORPUS keys (`dir#suffix` — a store over a subset/derived
     // view of dir, e.g. the IVF refresh gate's base store) must fall
     // with the dir they derive from; a LONGER dir sharing the prefix
     // must not ("/data/v1x" is a different corpus)
-    cache.put((s, "/data/v1#ivf-append-base"), 7)
-    cache.put((s, "/data/v1x"), 8)
+    cache((s, "/data/v1#ivf-append-base"))(7)
+    cache((s, "/data/v1x"))(8)
     val n = Caches.evictArtifacts(s, "/data/v1")
     assert(n == 3)
-    assert(!cache.containsKey((s, "/data/v1")))
-    assert(!cache.containsKey((s, "/data/v1#ivf-append-base")))
-    assert(cache.containsKey((s, "/data/v1x")))
-    assert(cache.containsKey((s, "/data/KEEP")))
-    assert(!tupleCache.containsKey((s, "/data/v1", 0.5)))
-    assert(a.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(c.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    assert(b.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(!cache.contains((s, "/data/v1")))
+    assert(!cache.contains((s, "/data/v1#ivf-append-base")))
+    assert(cache.contains((s, "/data/v1x")))
+    assert(cache.contains((s, "/data/KEEP")))
+    assert(!tupleCache.contains((s, "/data/v1", 0.5)))
+    assert(a.storageLevel == StorageLevel.NONE)
+    assert(c.storageLevel == StorageLevel.NONE)
+    assert(b.storageLevel == StorageLevel.MEMORY_AND_DISK)
     // sanctioned frames lose their sanction on eviction: a second pass
-    // finds nothing left
+    // finds nothing left, and a re-pinned evicted frame is transient
+    // again (release drops it) while the surviving artifact is not
     assert(Caches.evictArtifacts(s, "/data/v1") == 0)
-    b.unpersist(true)
+    Caches.release(Caches.deferRelease(a.persist()), blocking = true)
+    assert(a.storageLevel == StorageLevel.NONE)
+    Caches.release(b, blocking = true)
+    assert(b.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(Caches.evictArtifacts(s, "/data/KEEP") == 1)
+    assert(b.storageLevel == StorageLevel.NONE)
+  }
+
+  test("a build persists and sanctions its fresh frames, leaves a frame " +
+    "shared with another artifact as it is, and may nest another build") {
+    val s = spark
+    import s.implicits._
+    val dir = "/data/nested"
+    val inner = new Caches.ArtifactMemo[(SparkSession, String), DataFrame]
+    val outer =
+      new Caches.ArtifactMemo[(SparkSession, String), (DataFrame, DataFrame)]
+    // the shared frame belongs to another artifact, persisted at a level
+    // the memo never uses: a second persist would show as a change
+    val shared = Seq(1).toDF("shared").persist(StorageLevel.MEMORY_ONLY)
+    val fresh = Seq(2).toDF("fresh")
+    val (f, sh) = outer((s, dir)) {
+      // another artifact's build nested inside this one must not throw
+      (fresh, inner((s, dir))(shared))
+    }
+    assert((f eq fresh) && (sh eq shared))
+    assert(inner((s, dir))(fail("inner artifact rebuilt")) eq shared)
+    assert(fresh.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(shared.storageLevel == StorageLevel.MEMORY_ONLY)
+    // sanctioned: releaseTransient and release leave the artifact alone
+    Caches.releaseTransient(s, blocking = true)
+    Caches.release(fresh, blocking = true)
+    assert(fresh.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    // a warm lookup returns the memoized value without building
+    assert(outer((s, dir))(fail("outer artifact rebuilt"))._1 eq fresh)
+    val (_, reads, builds) = Caches.traceArtifacts {
+      outer((s, dir))(fail("outer artifact rebuilt"))
+    }
+    assert(reads.size == 1 && builds.isEmpty)
+    assert(Caches.evictArtifacts(s, dir) == 2)
+    assert(fresh.storageLevel == StorageLevel.NONE)
+    assert(shared.storageLevel == StorageLevel.NONE)
   }
 
   test("end to end: a regenerated corpus dir serves a stale frozen " +
@@ -111,8 +149,7 @@ class CachesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     val other = s.newSession()
     val dir = s"/fuzz/corpus-${java.util.UUID.randomUUID().toString.take(8)}"
-    val cache = Caches.registerArtifactCache(
-      new java.util.concurrent.ConcurrentHashMap[Any, Any]())
+    val cache = new Caches.ArtifactMemo[Any, Any]
     val rnd = new scala.util.Random(181818L)
     // string pool: matching spellings and near-misses of the convention
     def strings(): String = rnd.nextInt(8) match {
@@ -147,7 +184,7 @@ class CachesSpec extends AnyFunSuite with BeforeAndAfterAll {
         case (_, Seq(a, b, c)) => (a, b, c)
         case (_, es) => (es(0), es(1), es(2), es(3))
       }
-      cache.put(key, i)
+      cache(key)(i)
       key
     }.distinct
     val expectEvicted = keys.filter {
@@ -159,15 +196,10 @@ class CachesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(expectEvicted.nonEmpty && expectEvicted.size < keys.size,
       "fuzz must generate both evicted and surviving shapes")
     Caches.evictArtifacts(s, dir)
-    val survivors = {
-      val b = Seq.newBuilder[Any]
-      cache.keySet().forEach(k => { b += k; () })
-      b.result().toSet
-    }
+    val survivors = keys.filter(cache.contains).toSet
     val wronglyKept = expectEvicted.intersect(survivors)
     val wronglyEvicted = keys.toSet.diff(expectEvicted).diff(survivors)
     assert(wronglyKept.isEmpty, s"escaped eviction: $wronglyKept")
     assert(wronglyEvicted.isEmpty, s"over-evicted: $wronglyEvicted")
-    cache.clear()
   }
 }

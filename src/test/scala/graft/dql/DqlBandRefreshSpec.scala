@@ -16,8 +16,11 @@ import graft.pipeline.{Dedup, Similarity}
   *     disjoint under append); any id overlap rebuilds.
   *   - [[DqlArtifacts.lshRefresh]] — row-local bucketing, so append ≡
   *     rebuild for new ids; overlap rebuilds.
+  *   - [[DqlArtifacts.gramRefresh]] / [[DqlArtifacts.gramCanonRefresh]] —
+  *     counts merge under append; overlap rebuilds.
   *
-  * Both memoize per deltaId with the ivfRefresh content contract. The
+  * All memoize per deltaId with the one refresh policy's content
+  * contract. The
   * gate `dql_pipeline_neardup_refresh` pins the band append path
   * against the full-corpus pair oracle at the fixture.
   */
@@ -112,10 +115,26 @@ class DqlBandRefreshSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("band refresh: empty deltaId is a typed error (content contract)") {
-    val store = new TableStore("band-refresh-empty", "documents",
+    val docs = new TableStore("band-refresh-empty", "documents",
       docsDf(Seq(0L -> text())))
-    intercept[IllegalArgumentException](
-      DqlArtifacts.bandRefresh(spark, store, "", docsDf(Seq())))
+    val vecs = new TableStore("band-refresh-empty-vecs", "embeddings",
+      vecsDf(Seq(0L -> Seq.fill(4)(0.5f))))
+    // the one refresh policy's deltaId check serves all five artifacts
+    val refreshes: Seq[(String, () => Any)] = Seq(
+      "bandRefresh" -> (() =>
+        DqlArtifacts.bandRefresh(spark, docs, "", docsDf(Seq()))),
+      "gramRefresh" -> (() =>
+        DqlArtifacts.gramRefresh(spark, docs, "", docsDf(Seq()), n = 3)),
+      "gramCanonRefresh" -> (() =>
+        DqlArtifacts.gramCanonRefresh(spark, docs, "", docsDf(Seq()), n = 3)),
+      "ivfRefresh" -> (() => DqlArtifacts.ivfRefresh(spark, vecs, "",
+        vecsDf(Seq()), nCellsOverride = 2)),
+      "lshRefresh" -> (() => DqlArtifacts.lshRefresh(spark, vecs, "",
+        vecsDf(Seq()), bitsOverride = 2)))
+    refreshes.foreach { case (fn, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"$fn: deltaId must be non-empty"), fn)
+    }
   }
 
   test("gram refresh: new-id delta merges into the counts artifact and " +
