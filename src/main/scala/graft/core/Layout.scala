@@ -40,17 +40,6 @@ object Layout {
   def readSeries(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Bucketed table write: co-locates rows by join key so equi-joins
-    * between tables bucketed on the same key (same bucket count) are
-    * shuffle-free — at 100 TB, the difference between re-shuffling the
-    * fact table per join and reading pre-placed buckets. Demonstrated in
-    * LayoutSpec: a join of two such tables plans with zero Exchanges.
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-                    buckets: Int): Unit =
-    df.write.bucketBy(buckets, key).sortBy(key)
-      .mode("overwrite").saveAsTable(table)
-
   /** range scan with explicit partition predicate derived from the ms
     * range — this is what the DQL compiler's leaf would issue in a
     * production store binding.

@@ -1,7 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType,
+  TimestampType}
 
 /** The long-format series model (SURVEY §1.5), derived from the `events`
   * testdata table.
@@ -25,26 +27,44 @@ import org.apache.spark.sql.functions._
 object SeriesOps {
   val ResolutionMs = 1000L
 
-  /** `events` with a normalized epoch-millis `ts_ms` column. The testdata
+  /** Every read of `events` sets this first: TIMESTAMP(NANOS) is
+    * readable only as int64 nanos (SPARK-40819), see [[tsMillis]].
+    */
+  def readNanosAsLong(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  /** Decode `events.ts`, read as type `t`, to epoch millis. The testdata
     * generator has shipped `ts` under three parquet encodings across
-    * rounds — TIMESTAMP(NANOS) (readable only as int64 nanos via the
-    * `nanosAsLong` legacy conf, SPARK-40819), TIMESTAMP_NTZ micros
-    * (isAdjustedToUTC=false), and plain TIMESTAMP — so dispatch on the
-    * type the scan actually produces. Nanos use *integer* division
-    * (≈1.7e18 exceeds double's 2^53 mantissa); NTZ wall-clock is read as
-    * UTC (sessions here pin spark.sql.session.timeZone=UTC), matching
-    * the DuckDB oracle's naive-timestamp `epoch_ms`.
+    * rounds — TIMESTAMP(NANOS) (read as int64 nanos under
+    * [[readNanosAsLong]]), TIMESTAMP_NTZ micros (isAdjustedToUTC=false),
+    * and plain TIMESTAMP — so dispatch on the type the scan actually
+    * produces. Nanos use *integer* division (≈1.7e18 exceeds double's
+    * 2^53 mantissa); NTZ wall-clock is read as UTC (sessions here pin
+    * spark.sql.session.timeZone=UTC), matching the DuckDB oracle's
+    * naive-timestamp `epoch_ms`.
+    */
+  def tsMillis(t: DataType): Column = t match {
+    case LongType => expr("ts DIV 1000000")
+    case TimestampNTZType => unix_millis(col("ts").cast(TimestampType))
+    case _ => unix_millis(col("ts"))
+  }
+
+  /** Encode epoch millis `ms` as an `events.ts` value of type `t` — the
+    * inverse of [[tsMillis]].
+    */
+  def tsValue(ms: Long, t: DataType): Column = t match {
+    case LongType => lit(ms * 1000000L)
+    case _ => timestamp_millis(lit(ms)).cast(t)
+  }
+
+  /** `events` with a normalized epoch-millis `ts_ms` column
+    * ([[tsMillis]]).
     */
   def events(spark: SparkSession, dir: String,
              widen: Boolean = true): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readNanosAsLong(spark)
     val df = Tables(spark, dir, "events")
-    val tsMs = df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts DIV 1000000")
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        unix_millis(col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => unix_millis(col("ts"))
-    }
+    val tsMs = tsMillis(df.schema("ts").dataType)
     // the testdata file is a single row group → a handful of input splits
     // on a 32-core box, so every downstream map stage (json-path filters,
     // regex, slot aggregation) ran on a fraction of the machine; widen is

@@ -133,16 +133,16 @@ final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
     }
   }
 
-  /** TOP/BOTTOM n BY fun: score each output series by running the fun over
-    * its ENTIRE range as one window (src/dqe_funnel.erl:59-71), keep the n
-    * best series' streams. Deterministic tie-break on the series key.
-    */
   /** constant-free aggregates a BY clause can score with (the
     * threshold family needs a constant the Limit grammar cannot
     * supply; percentile needs its fraction) */
   private val LimitFns: Set[String] =
     Set("sum", "avg", "min", "max", "variance", "stddev", "median")
 
+  /** TOP/BOTTOM n BY fun: score each output series by running the fun over
+    * its ENTIRE range as one window (src/dqe_funnel.erl:59-71), keep the n
+    * best series' streams. Deterministic tie-break on the series key.
+    */
   private def applyLimit(df: DataFrame, lim: Limit): DataFrame = {
     // typed registry error, never a MatchError from the aggregate
     // dispatch (r17 review)

@@ -65,10 +65,6 @@ trait SeriesStore {
       s"store has no corpus table '$name'")
 }
 
-/** The driver-testdata store: one bucket ("testdata") at 1 s resolution,
-  * series derived from `events` (SURVEY §1.5 mapping; FIXTURES.md B),
-  * tags `type` (event_type) and `user` (user_id).
-  */
 /** Production-layout binding: the date-partitioned series table written by
   * [[graft.core.Layout]]. Same DQL, same compiler — the overridden
   * [[scanRange]] adds the dt partition predicates, so every query's
@@ -96,6 +92,10 @@ final class LayoutStore(path: String,
       "LayoutStore holds metric series only")
 }
 
+/** The driver-testdata store: one bucket ("testdata") at 1 s resolution,
+  * series derived from `events` (SURVEY §1.5 mapping; FIXTURES.md B),
+  * tags `type` (event_type) and `user` (user_id).
+  */
 final class TestdataStore(dir: String) extends SeriesStore {
   override def corpusKey: String = dir
   def resolutionMs(bucket: String): Long = SeriesOps.ResolutionMs

@@ -26,8 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * digested zero-copy with one reused MessageDigest, 3 md5s per shingle
   * exactly like the composed form. Channel c of seed s is digest bytes
   * [4c, 4c+4) as an unsigned big-endian 32-bit value — the same number
-  * the hex-substring parse yields ([[HexSliceLong]]), so the minima (and
-  * therefore every band key derived from them) are unchanged.
+  * its 8-char hex substring parses to, so the minima (and therefore
+  * every band key derived from them) are unchanged.
   *
   * NULL for texts with fewer than `n` words (the shingle explode
   * produces no rows for them, so they are absent from the composed

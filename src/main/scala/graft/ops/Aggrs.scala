@@ -29,18 +29,6 @@ object Aggrs {
     "count_above", "count_below", "first_above", "first_below",
     "last_above", "last_below")
 
-  /** k-th-smallest discrete quantile, deterministic across engines.
-    *
-    * Memory bound: the only §2.2 aggregate whose per-group state is
-    * O(window points) rather than O(1) — the window's values are collected
-    * and sorted in the finishing task. The reference's own read envelope
-    * caps a window at `max_read` = 1.2 M points (BASELINE.md), ≈ tens of MB
-    * of aggregation buffer per group, well inside a default executor; a
-    * 10⁶-point window is exercised in OpsSemanticsSpec without raising
-    * driver memory. Beyond that envelope, swap in `approx_percentile`
-    * (t-digest, O(1) state) — not done by default because the oracle gates
-    * require the exact order statistic.
-    */
   /** MEMORY BOUND: [[kth]] collects one group's values into a sorted
     * array, so per-group memory is O(group rows). For every DQL shape
     * that reaches it the group is one (series, window) slot — rows =
@@ -74,6 +62,18 @@ object Aggrs {
         .cast("long")) - 1L).cast("int"))
   }
 
+  /** k-th-smallest discrete quantile, deterministic across engines.
+    *
+    * Memory bound: the only §2.2 aggregate whose per-group state is
+    * O(window points) rather than O(1) — the window's values are collected
+    * and sorted in the finishing task. The reference's own read envelope
+    * caps a window at `max_read` = 1.2 M points (BASELINE.md), ≈ tens of MB
+    * of aggregation buffer per group, well inside a default executor; a
+    * 10⁶-point window is exercised in OpsSemanticsSpec without raising
+    * driver memory. Beyond that envelope, swap in `approx_percentile`
+    * (t-digest, O(1) state) — not done by default because the oracle gates
+    * require the exact order statistic.
+    */
   private def kth(v: Column, p: Double): Column =
     kthBounded(v, p, KthGroupRowBound)
 

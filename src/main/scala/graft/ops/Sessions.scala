@@ -383,6 +383,15 @@ object Sessions {
        |SELECT path, COUNT(*) AS n_users FROM p GROUP BY path
        |ORDER BY n_users DESC, path ASC LIMIT $k""".stripMargin
 
+  /** the fixed segment rule over (recency_days, frequency) — shared by
+    * the batch board and the online form so the labels cannot drift
+    */
+  def rfmSegment: org.apache.spark.sql.Column =
+    when(col("recency_days") <= 2 && col("frequency") >= 15, "champion")
+      .when(col("recency_days") <= 2, "active")
+      .when(col("recency_days") <= 6, "warm")
+      .otherwise("dormant")
+
   /** RFM customer segmentation — the classic recency/frequency/monetary
     * board over purchase events: per-user days-since-last-purchase
     * (integer-div against the corpus frontier, broadcast as a one-row
@@ -394,15 +403,6 @@ object Sessions {
     *
     * Output: (user_id, recency_days, frequency, monetary, segment).
     */
-  /** the fixed segment rule over (recency_days, frequency) — shared by
-    * the batch board and the online form so the labels cannot drift
-    */
-  def rfmSegment: org.apache.spark.sql.Column =
-    when(col("recency_days") <= 2 && col("frequency") >= 15, "champion")
-      .when(col("recency_days") <= 2, "active")
-      .when(col("recency_days") <= 6, "warm")
-      .otherwise("dormant")
-
   def rfm(ev: DataFrame): DataFrame = {
     val p = ev.where(col("event_type") === "purchase")
     val mx = p.agg(max(col("ts_ms")).as("now_ms"))

@@ -174,15 +174,6 @@ object Curation {
 
   // -------------------------------------------------- stratified sampling
 
-  /** Deterministic stratified sampling: keep a document iff the first 32
-    * bits of md5(doc_id) fall below its stratum's rate — reproducible
-    * across runs/engines (no RNG state), stable under corpus growth (a
-    * doc's fate never depends on other docs), and exactly the mixing
-    * primitive a training pipeline uses to reweight sources.
-    *
-    * Purely map-side: no shuffle at all; the sample streams out of the
-    * scan. Rates are per-`strataCol` value with a default for the rest.
-    */
   /** First 32 bits of md5(doc_id) as a uniform [0, 2^32) draw — THE
     * sampling hash: [[sampleStratified]] thresholds it,
     * [[sampleByCluster]] orders by it. Single-sourced so the documented
@@ -192,6 +183,15 @@ object Curation {
     conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
       .cast("long")
 
+  /** Deterministic stratified sampling: keep a document iff the first 32
+    * bits of md5(doc_id) fall below its stratum's rate — reproducible
+    * across runs/engines (no RNG state), stable under corpus growth (a
+    * doc's fate never depends on other docs), and exactly the mixing
+    * primitive a training pipeline uses to reweight sources.
+    *
+    * Purely map-side: no shuffle at all; the sample streams out of the
+    * scan. Rates are per-`strataCol` value with a default for the rest.
+    */
   def sampleStratified(docs: DataFrame, strataCol: String,
                        rates: Map[String, Double],
                        defaultRate: Double): DataFrame = {

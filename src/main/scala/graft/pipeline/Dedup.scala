@@ -345,10 +345,6 @@ object Dedup {
     (pairs, melted)
   }
 
-  /** SQL mirror of [[bandedCandidates]] + [[verifyJaccard]] given a shingle
-    * CTE named `sh` already in scope; emits CTE bodies `sig … pairs` and the
-    * final verified SELECT.
-    */
   /** the shared signature → banded → melted CTE chain (given a shingle
     * CTE `sh` in scope): the SQL derivation of the band keys both the
     * pair mirror and the hot-band disclosure mirror read
@@ -379,6 +375,10 @@ object Dedup {
        |HAVING COUNT(*) > $maxBucket
        |ORDER BY band_idx, bh""".stripMargin
 
+  /** SQL mirror of [[bandedCandidates]] + [[verifyJaccard]] given a shingle
+    * CTE named `sh` already in scope; emits CTE bodies `sig … pairs` and the
+    * final verified SELECT.
+    */
   private def bandedVerifySql(threshold: Double): String = {
     s"""$sigBandMeltSql,
        |pairs AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
@@ -400,17 +400,6 @@ object Dedup {
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  /** exact |A∩B| / |A∪B| over candidate pairs; integer counts → the final
-    * double division is deterministic. Returns the verified pairs plus the
-    * pruned-shingle intermediate it persisted (for the caller's
-    * [[Persist.handoff]] release list).
-    *
-    * Scale note: LSH candidates are a vanishing fraction of the corpus, so
-    * the shingle table is semi-join-pruned to candidate docs FIRST (the
-    * candidate id set broadcasts) — the intersection join then shuffles
-    * only candidate shingles, not the full corpus's. Pure pruning: the
-    * output is identical, so the DuckDB mirror keeps the direct joins.
-    */
   /** the row-local distinct n-word shingle SET over the withWords
     * array `w` — the same elements collect_set over the shingle explode
     * yields (order differs; every consumer is array_intersect, which is
@@ -422,6 +411,17 @@ object Dedup {
       s"transform(sequence(0, size(w)-$n), i -> concat_ws(' ', $idx))"))
   }
 
+  /** exact |A∩B| / |A∪B| over candidate pairs; integer counts → the final
+    * double division is deterministic. Returns the verified pairs plus the
+    * pruned-shingle intermediate it persisted (for the caller's
+    * [[Persist.handoff]] release list).
+    *
+    * Scale note: LSH candidates are a vanishing fraction of the corpus, so
+    * the shingle table is semi-join-pruned to candidate docs FIRST (the
+    * candidate id set broadcasts) — the intersection join then shuffles
+    * only candidate shingles, not the full corpus's. Pure pruning: the
+    * output is identical, so the DuckDB mirror keeps the direct joins.
+    */
   private def verifyJaccard(pairs: DataFrame, docs: DataFrame, n: Int,
                             threshold: Double): (DataFrame, DataFrame) = {
     val cand = pairs
@@ -818,16 +818,6 @@ object Dedup {
 
   // ── exact substring-SPAN dedup (the Lee et al. 2022 method) ─────────
 
-  /** RAW per-document n-token WINDOW hashes with their start positions —
-    * the working table of exact substring-span dedup (Lee, Ippolito et
-    * al. 2022, "Deduplicating Training Data Makes Language Models
-    * Better"). The published method builds a corpus suffix array; the
-    * distributed equivalent is hash-windowing: any repeated span of
-    * ≥ n tokens necessarily contains a repeated n-token window, so the
-    * windows are a complete candidate generator for spans at that
-    * granularity. Row-local over the word array (no window functions,
-    * no self-join): one explode of (len − n + 1) rows per document.
-    */
   /** the n-token window hashes of the row's word array `w`, in start
     * order — shared by the batch occurrence table and the streaming
     * scrub (empty when the document is shorter than one window; without
@@ -839,6 +829,16 @@ object Dedup {
         s"i -> md5(array_join(slice(w, i + 1, $n), ' ')))"))
       .otherwise(array().cast("array<string>"))
 
+  /** RAW per-document n-token WINDOW hashes with their start positions —
+    * the working table of exact substring-span dedup (Lee, Ippolito et
+    * al. 2022, "Deduplicating Training Data Makes Language Models
+    * Better"). The published method builds a corpus suffix array; the
+    * distributed equivalent is hash-windowing: any repeated span of
+    * ≥ n tokens necessarily contains a repeated n-token window, so the
+    * windows are a complete candidate generator for spans at that
+    * granularity. Row-local over the word array (no window functions,
+    * no self-join): one explode of (len − n + 1) rows per document.
+    */
   private[graft] def gramOccurrences(docs: DataFrame, n: Int): DataFrame = {
     require(n >= 2, s"n must be >= 2, got $n")
     withWords(docs)
@@ -978,29 +978,6 @@ object Dedup {
   def substringScrub(docs: DataFrame, n: Int): DataFrame =
     scrubBySpans(docs, spanTable(docs, n))
 
-  /** [[substringScrub]] with Lee et al. 2022's keep-one semantics: for
-    * each duplicated window hash, the corpus-FIRST occurrence (min
-    * (doc_id, pos) — a deterministic canonical choice) is exempted from
-    * the hit set before the island merge, so one copy of every repeated
-    * phrase survives the rewrite and only the other copies are cut.
-    *
-    * Scale shape: identical to the keep-zero path — the canonical
-    * occurrence rides the dup-hash aggregation itself as a `min` over an
-    * order-preserving packed key (map-side combinable, so a boilerplate
-    * phrase repeated 10⁵ times corpus-wide collapses to one partial per
-    * input partition before the shuffle), and the exemption is a
-    * row-local inequality on the joined hit — no window over the gram
-    * hash, no single-task sort under a hot gram, no second join, no
-    * extra corpus scan.
-    *
-    * The key packs (doc_id, pos) as `doc_id·2³² + pos` in DECIMAL(38,0):
-    * `min(struct(…))` would demote the aggregation to SortAggregate
-    * (struct is not a mutable agg-buffer type), locally sorting the
-    * whole occurrence table; a fixed-width decimal keeps it in
-    * HashAggregate. Monotone in (doc_id, pos) — pos ∈ [0, 2³¹) — so the
-    * decimal min IS the `ORDER BY doc_id, pos` first occurrence, for
-    * negative doc_id too.
-    */
   /** the order-preserving packed occurrence key (see
     * [[substringScrubKeepFirst]]'s scale note): `doc_id·2³² + pos` in
     * DECIMAL(38,0) — monotone in (doc_id, pos), fixed-width so min stays
@@ -1050,6 +1027,29 @@ object Dedup {
           coalesce(col("c_d"), lit(0L))).as("c"),
         least(col("c0_b"), col("c0_d")).as("c0"))
 
+  /** [[substringScrub]] with Lee et al. 2022's keep-one semantics: for
+    * each duplicated window hash, the corpus-FIRST occurrence (min
+    * (doc_id, pos) — a deterministic canonical choice) is exempted from
+    * the hit set before the island merge, so one copy of every repeated
+    * phrase survives the rewrite and only the other copies are cut.
+    *
+    * Scale shape: identical to the keep-zero path — the canonical
+    * occurrence rides the dup-hash aggregation itself as a `min` over an
+    * order-preserving packed key (map-side combinable, so a boilerplate
+    * phrase repeated 10⁵ times corpus-wide collapses to one partial per
+    * input partition before the shuffle), and the exemption is a
+    * row-local inequality on the joined hit — no window over the gram
+    * hash, no single-task sort under a hot gram, no second join, no
+    * extra corpus scan.
+    *
+    * The key packs (doc_id, pos) as `doc_id·2³² + pos` in DECIMAL(38,0):
+    * `min(struct(…))` would demote the aggregation to SortAggregate
+    * (struct is not a mutable agg-buffer type), locally sorting the
+    * whole occurrence table; a fixed-width decimal keeps it in
+    * HashAggregate. Monotone in (doc_id, pos) — pos ∈ [0, 2³¹) — so the
+    * decimal min IS the `ORDER BY doc_id, pos` first occurrence, for
+    * negative doc_id too.
+    */
   def substringScrubKeepFirst(docs: DataFrame, n: Int): DataFrame =
     substringScrubKeepFirstWith(docs, dupGramsWithCanon(docs, n), n)
 

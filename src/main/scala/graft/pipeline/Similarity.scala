@@ -81,13 +81,6 @@ object Similarity {
        |WHERE ${VectorOps.cosineSql("q.embedding", "t.embedding", dim)} >= $minCos
        |ORDER BY query_id, vec_id""".stripMargin
 
-  /** LSH-bucketed radius search — [[rangeSearch]]'s scale path: only
-    * the query's hyperplane-sign bucket is scored, so corpus work per
-    * query is the bucket population, not the corpus (the recall trade
-    * every LSH search makes). Same equi-join-on-bucket shape as
-    * [[lshTopK]], but selection is the threshold filter — no window, no
-    * per-query exchange.
-    */
   /** the (vec_id, embedding, bkt, nrm) hyperplane-sign bucketing both
     * sides of the LSH join share — row-local, so a memoized artifact of
     * this shape over the corpus is the whole "band index"
@@ -97,6 +90,13 @@ object Similarity {
       VectorOps.lshBucket(col("embedding"), bits, dim).as("bkt"),
       VectorOps.norm(col("embedding")).as("nrm"))
 
+  /** LSH-bucketed radius search — [[rangeSearch]]'s scale path: only
+    * the query's hyperplane-sign bucket is scored, so corpus work per
+    * query is the bucket population, not the corpus (the recall trade
+    * every LSH search makes). Same equi-join-on-bucket shape as
+    * [[lshTopK]], but selection is the threshold filter — no window, no
+    * per-query exchange.
+    */
   def rangeSearchLsh(emb: DataFrame, queries: DataFrame, bits: Int,
                      dim: Int, minCos: Double): DataFrame =
     rangeSearchLshOn(lshPrep(emb, bits, dim),
@@ -193,14 +193,6 @@ object Similarity {
       .where(col("rank") <= k)
   }
 
-  /** IVF-flavored top-k: a coarse quantizer of `nCells` centroids (here
-    * the first nCells vectors by id — a deterministic stand-in for trained
-    * k-means centroids), every vector assigned to its nearest centroid
-    * cell, search restricted to the query's cell. The cell id is a
-    * partition key at scale — the inverted-file layout. Ties in the
-    * nearest-centroid argmin break on centroid id, so the index is
-    * deterministic and engine-comparable.
-    */
   /** The coarse quantizer's centroid table (cid, cvec, cnrm) — shared by
     * the batch search and the streaming packed index
     * ([[graft.streaming.SimStream]]).
@@ -293,6 +285,14 @@ object Similarity {
   def ivfCells(emb: DataFrame, nCells: Int): DataFrame =
     ivfAssign(emb, ivfCents(emb, nCells))
 
+  /** IVF-flavored top-k: a coarse quantizer of `nCells` centroids (here
+    * the first nCells vectors by id — a deterministic stand-in for trained
+    * k-means centroids), every vector assigned to its nearest centroid
+    * cell, search restricted to the query's cell. The cell id is a
+    * partition key at scale — the inverted-file layout. Ties in the
+    * nearest-centroid argmin break on centroid id, so the index is
+    * deterministic and engine-comparable.
+    */
   def ivfTopK(emb: DataFrame, queries: DataFrame, nCells: Int, dim: Int,
               k: Int): DataFrame = {
     val cells = ivfCells(emb, nCells)

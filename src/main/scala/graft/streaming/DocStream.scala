@@ -34,28 +34,6 @@ object DocStream {
       .withColumn("text_hash", md5(col("text")))
       .dropDuplicatesWithinWatermark("text_hash")
 
-  /** exact-dedup then score: kept documents annotated with the SAME
-    * quality operator the batch gates verify — a narrow projection, so it
-    * composes with the streaming dedup without any extra state or join.
-    */
-  def curate(docs: DataFrame, watermark: String): DataFrame =
-    graft.pipeline.TextOps.withQuality(dedupExact(docs, watermark))
-
-  /** Live vocabulary heavy-hitters — the streaming form of
-    * [[graft.pipeline.TextOps.vocabTopK]]'s occurrence column: word
-    * counts over everything that has arrived so far, topped at `k`
-    * (complete output mode — each trigger republishes the current
-    * leaderboard, the live-dashboard contract). The tokenizer is the
-    * batch operator's, so the stream's counts equal the batch's on the
-    * same corpus.
-    *
-    * State is one count per distinct word — vocabulary-bounded, not
-    * corpus-bounded (the same reason word counts were THE original
-    * streaming-aggregation demo), with map-side partial aggregation
-    * ahead of the one shuffle. The doc-frequency column needs a distinct
-    * aggregate (unsupported over streams); the batch operator carries
-    * it, the stream serves the occurrence leaderboard.
-    */
   /** Online CCNet perplexity labeling: each ARRIVING document is scored
     * against the frozen unigram LM and labeled head/middle/tail against
     * the frozen per-language tercile cuts — both batch-refreshed
@@ -138,6 +116,21 @@ object DocStream {
         col("col.score").as("score"))
   }
 
+  /** Live vocabulary heavy-hitters — the streaming form of
+    * [[graft.pipeline.TextOps.vocabTopK]]'s occurrence column: word
+    * counts over everything that has arrived so far, topped at `k`
+    * (complete output mode — each trigger republishes the current
+    * leaderboard, the live-dashboard contract). The tokenizer is the
+    * batch operator's, so the stream's counts equal the batch's on the
+    * same corpus.
+    *
+    * State is one count per distinct word — vocabulary-bounded, not
+    * corpus-bounded (the same reason word counts were THE original
+    * streaming-aggregation demo), with map-side partial aggregation
+    * ahead of the one shuffle. The doc-frequency column needs a distinct
+    * aggregate (unsupported over streams); the batch operator carries
+    * it, the stream serves the occurrence leaderboard.
+    */
   def vocabTopK(docs: DataFrame, k: Int): DataFrame =
     graft.pipeline.Dedup.withWords(docs)
       .select(explode(col("w")).as("word"))
@@ -275,6 +268,16 @@ object DocStream {
       .toDF("doc_id", "decision")
   }
 
+  /** row-local 3-word shingle array (`sh`) — the per-document equivalent
+    * of the batch exploded [[graft.pipeline.Dedup.shingles3]] rows; docs
+    * shorter than one shingle are dropped on both sides
+    */
+  private def withShingles(docs: DataFrame): DataFrame =
+    docs.withColumn("w", split(trim(col("text")), " "))
+      .where(size(col("w")) >= 3)
+      .withColumn("sh", expr("transform(sequence(0, size(w)-3), " +
+        "i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"))
+
   /** NEAR-duplicate detection for a document firehose against a static
     * corpus index ([[graft.pipeline.Dedup.bandIndex]]) — the production
     * posture for pairwise dedup on a stream: the pairwise join runs
@@ -302,16 +305,6 @@ object DocStream {
     * @param docs  streaming frame (ts: timestamp, doc_id, text)
     * @param index batch frame from [[graft.pipeline.Dedup.bandIndex]]
     */
-  /** row-local 3-word shingle array (`sh`) — the per-document equivalent
-    * of the batch exploded [[graft.pipeline.Dedup.shingles3]] rows; docs
-    * shorter than one shingle are dropped on both sides
-    */
-  private def withShingles(docs: DataFrame): DataFrame =
-    docs.withColumn("w", split(trim(col("text")), " "))
-      .where(size(col("w")) >= 3)
-      .withColumn("sh", expr("transform(sequence(0, size(w)-3), " +
-        "i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"))
-
   def nearDupAgainstIndex(docs: DataFrame, index: DataFrame,
                           threshold: Double, watermark: String): DataFrame =
     nearDupCandidates(docs.withWatermark("ts", watermark), index, threshold)

@@ -48,29 +48,6 @@ object EventStream {
     */
   final case class FunnelSt(times: Seq[Long])
 
-  /** Online conversion funnel — the streaming form of
-    * [[graft.ops.Sessions.funnel]]: per-user keyed state holds the
-    * step-conversion times; when an arriving event completes a user's
-    * next step (strictly after the previous step's time, the batch
-    * rule), the stateful stage emits that (user, step) exactly once, and
-    * a downstream count aggregates live per-step converted-user totals.
-    * Two stateful operators — flatMapGroupsWithState in Append feeding a
-    * grouped count (run the query in update mode) — both keyed small:
-    * state is one long array per user, one count row per step.
-    *
-    * In-order contract: events are folded in event-time order WITHIN a
-    * micro-batch; an event arriving in a later batch with an earlier
-    * timestamp than an already-recorded conversion cannot retract it
-    * (the batch form's global min can). Same within-watermark trade
-    * every online funnel makes; the replay gate arrives as one batch, so
-    * the gate matches the batch oracle exactly (for steps with at least
-    * one conversion — a zero-converter step emits no count row online,
-    * while the batch form reports it as 0).
-    *
-    * State lifetime: funnel state is permanent per user by default (an
-    * analytics funnel is a lifetime property); bound it with a state-
-    * TTL variant if user cardinality is unbounded.
-    */
   /** Online daily actives: event-time dedup on (user, day) feeding a
     * windowed count — the supported chained stateful pattern
     * (dropDuplicatesWithinWatermark → window aggregation, append mode),
@@ -342,6 +319,29 @@ object EventStream {
       .toDF("user_id", "conv_id", "conv_ts", "touch_id", "gap_ms")
   }
 
+  /** Online conversion funnel — the streaming form of
+    * [[graft.ops.Sessions.funnel]]: per-user keyed state holds the
+    * step-conversion times; when an arriving event completes a user's
+    * next step (strictly after the previous step's time, the batch
+    * rule), the stateful stage emits that (user, step) exactly once, and
+    * a downstream count aggregates live per-step converted-user totals.
+    * Two stateful operators — flatMapGroupsWithState in Append feeding a
+    * grouped count (run the query in update mode) — both keyed small:
+    * state is one long array per user, one count row per step.
+    *
+    * In-order contract: events are folded in event-time order WITHIN a
+    * micro-batch; an event arriving in a later batch with an earlier
+    * timestamp than an already-recorded conversion cannot retract it
+    * (the batch form's global min can). Same within-watermark trade
+    * every online funnel makes; the replay gate arrives as one batch, so
+    * the gate matches the batch oracle exactly (for steps with at least
+    * one conversion — a zero-converter step emits no count row online,
+    * while the batch form reports it as 0).
+    *
+    * State lifetime: funnel state is permanent per user by default (an
+    * analytics funnel is a lifetime property); bound it with a state-
+    * TTL variant if user cardinality is unbounded.
+    */
   def funnel(events: DataFrame, steps: Seq[String],
              delay: String): DataFrame =
     funnelImpl(events, steps, delay, windowMs = 0L)

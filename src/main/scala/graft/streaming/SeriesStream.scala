@@ -57,37 +57,6 @@ object SeriesStream {
         col("value"), col("n_points"))
   }
 
-  /** Sliding-window variant: windows of `windowDur` advancing every
-    * `slideDur` (a point contributes to windowDur/slideDur windows) —
-    * the smoothing shape the reference approximates by re-querying with
-    * shifted ranges.
-    */
-  def slidingAgg(events: DataFrame, windowDur: String, slideDur: String,
-                 watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(
-        window(col("ts"), windowDur, slideDur).as("w"),
-        concat_ws(".", col("event_type"), col("user_id")).as("metric"))
-      .agg(avg(col("value")).as("value"), count(lit(1)).as("n_points"))
-      .select(col("metric"), unix_millis(col("w.start")).as("ws"),
-        col("value"), col("n_points"))
-
-  /** Session windows: activity bursts per series separated by `gapDur` of
-    * silence — the event-stream dual of [[detectGaps]].
-    */
-  def sessionAgg(events: DataFrame, gapDur: String,
-                 watermark: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(
-        session_window(col("ts"), gapDur).as("w"),
-        concat_ws(".", col("event_type"), col("user_id")).as("metric"))
-      .agg(count(lit(1)).as("n_points"), avg(col("value")).as("value"))
-      .select(col("metric"), unix_millis(col("w.start")).as("session_start"),
-        unix_millis(col("w.end")).as("session_end"), col("n_points"),
-        col("value"))
-
   /** derivate output point */
   final case class Deriv(metric: String, ts_ms: Long, value: Double)
 

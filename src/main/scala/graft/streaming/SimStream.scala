@@ -101,28 +101,13 @@ object SimStream {
       .agg(collect_list(
         struct(col("vec_id"), col("embedding"), col("nrm"))).as("dcands")))
 
-  /** [[ivfIndexAppend]] for the quantized index: quantize the
-    * newly-assigned batch (per-vector grids depend on nothing but the
-    * vector itself, so the delta's codes are bit-identical to what a full
-    * repack would produce) and fold it in with the same full-outer cell
-    * merge. The resident int8 artifact gets the same append-only refresh
-    * cadence as the float index (Sq8AppendSpec: append ≡ repack; search
-    * parity over the appended index).
-    */
-  def sq8IndexAppend(packed: DataFrame, assigned: DataFrame): DataFrame =
-    mergePacked(packed, Similarity.sq8Quantize(assigned)
-      .groupBy(col("cell"))
-      .agg(collect_list(
-        struct(col("vec_id"), col("lo"), col("step"), col("code"),
-          col("dnrm"))).as("dcands")))
-
   /** [[ivfIndexAppend]] for the product-quantized index: PQ-encode the
     * newly-assigned batch against the FROZEN codebook row (codes depend
     * on nothing but the vector and the codebooks, so the delta's code
     * words are bit-identical to what a full re-encode would produce) and
     * fold it in with the same full-outer cell merge. The codes-only
     * resident artifact gets the same append-only refresh cadence as the
-    * float and int8 indexes (PqAppendSpec: append ≡ rebuild; search
+    * float index (PqAppendSpec: append ≡ rebuild; search
     * parity over the appended index); codebooks retrain on the
     * coarse-quantizer cadence, not per batch.
     */
@@ -552,18 +537,6 @@ object SimStream {
       passthroughOf(queries))
   }
 
-  /** [[topKAgainstSq8IndexReranked]] one rung further down the memory
-    * ladder: the codes-only PQ index selects the `rerank`-deep shortlist
-    * by asymmetric PQ cosine (float query × codebook reconstruction),
-    * the full-precision packed index re-scores it exactly, final top-k
-    * by TRUE cosine — the batch [[Similarity.ivfPqRerankTopK]] semantics
-    * and tie-breaks reshaped into the same two-stateless-join,
-    * zero-stateful-operator stream. Only the 8-bytes-per-member PQ index
-    * need stay resident; the float32 side is the cold batch artifact the
-    * stream-static join touches per landed cell. Stream ≡ batch
-    * bit-for-bit at the same (k, rerank) — SimStreamPqSpec, and the
-    * `stream_sim_pq_rerank` gate runs the batch oracle SQL.
-    */
   /** Both online-PQ knobs in one stateless stream — the production
     * retrieval configuration: the query probes its `nProbe` nearest
     * cells over the codes-only PQ index (recall across Voronoi edges),
@@ -819,6 +792,18 @@ object SimStream {
       passthroughOf(queries))
   }
 
+  /** [[topKAgainstSq8IndexReranked]] one rung further down the memory
+    * ladder: the codes-only PQ index selects the `rerank`-deep shortlist
+    * by asymmetric PQ cosine (float query × codebook reconstruction),
+    * the full-precision packed index re-scores it exactly, final top-k
+    * by TRUE cosine — the batch [[Similarity.ivfPqRerankTopK]] semantics
+    * and tie-breaks reshaped into the same two-stateless-join,
+    * zero-stateful-operator stream. Only the 8-bytes-per-member PQ index
+    * need stay resident; the float32 side is the cold batch artifact the
+    * stream-static join touches per landed cell. Stream ≡ batch
+    * bit-for-bit at the same (k, rerank) — SimStreamPqSpec, and the
+    * `stream_sim_pq_rerank` gate runs the batch oracle SQL.
+    */
   def topKAgainstPqIndexReranked(queries: DataFrame, packed: DataFrame,
                                  packedFull: DataFrame, cents: DataFrame,
                                  cbsRow: DataFrame, k: Int, m: Int,

@@ -294,37 +294,6 @@ object StreamingDql {
     ordered.limit(lim.n)
   }
 
-  /** The batch multi-selector merge (`dqe_funnel`) FUSED into one stateful
-    * operator: each selector becomes a filtered aggregate inside a single
-    * (window, metric) groupBy, then an unpivot (`stack`) restores one row
-    * per selector with its own naming. NOT a union of per-selector
-    * streaming aggregations — a union of chained stateful branches is the
-    * one multi-stateful shape Spark does not run correctly (one branch's
-    * state silently starves; observed on 4.1: union of two slot-collapse
-    * chains emits only the first branch), and the fused form is cheaper
-    * anyway: one state row per (window, metric) for ALL selectors.
-    *
-    * Fusable selector shapes: pointwise transforms over any §2.2
-    * aggregation — including the six threshold `*_conf` forms — every
-    * selector sharing one window and one resolution (the batch funnel
-    * itself requires equal resolutions). Each selector's rows are
-    * restricted to the series matching ITS leaf via a per-selector
-    * presence aggregate — a window where the series has points but none
-    * qualify for a threshold aggregate still emits its batch NULL, while a
-    * series the selector never matched emits nothing, exactly the batch
-    * union's row set.
-    *
-    * Conf selectors fuse because presence is COLLAPSE-INVARIANT: a
-    * `*_conf` selector's per-window present-slot set is the same whether
-    * collected from raw events or from the collapsed slot rows (each
-    * present slot appears at least once either way), so its
-    * `collect_set(slot id)` rides in the same fused groupBy the value
-    * selectors use, and the {0,1} presence array + threshold mirror
-    * (confAggExpr) become post-aggregation projections on the set column.
-    * The fused mixed plan inherits the value selectors' chained
-    * append-mode shape; a funnel of ONLY conf selectors skips the
-    * collapse stage (update-capable), like the single-selector conf path.
-    */
   /** ALL-RAW multi-selector funnel: every selector is a plain
     * scan/lookup (± pointwise transforms), so the funnel is a union of
     * slot-row passthroughs — which must NOT compile as a union of
@@ -377,6 +346,37 @@ object StreamingDql {
         bySid(q.selectors.map(s => lit(metaJson(s)))).as("metadata"))
   }
 
+  /** The batch multi-selector merge (`dqe_funnel`) FUSED into one stateful
+    * operator: each selector becomes a filtered aggregate inside a single
+    * (window, metric) groupBy, then an unpivot (`stack`) restores one row
+    * per selector with its own naming. NOT a union of per-selector
+    * streaming aggregations — a union of chained stateful branches is the
+    * one multi-stateful shape Spark does not run correctly (one branch's
+    * state silently starves; observed on 4.1: union of two slot-collapse
+    * chains emits only the first branch), and the fused form is cheaper
+    * anyway: one state row per (window, metric) for ALL selectors.
+    *
+    * Fusable selector shapes: pointwise transforms over any §2.2
+    * aggregation — including the six threshold `*_conf` forms — every
+    * selector sharing one window and one resolution (the batch funnel
+    * itself requires equal resolutions). Each selector's rows are
+    * restricted to the series matching ITS leaf via a per-selector
+    * presence aggregate — a window where the series has points but none
+    * qualify for a threshold aggregate still emits its batch NULL, while a
+    * series the selector never matched emits nothing, exactly the batch
+    * union's row set.
+    *
+    * Conf selectors fuse because presence is COLLAPSE-INVARIANT: a
+    * `*_conf` selector's per-window present-slot set is the same whether
+    * collected from raw events or from the collapsed slot rows (each
+    * present slot appears at least once either way), so its
+    * `collect_set(slot id)` rides in the same fused groupBy the value
+    * selectors use, and the {0,1} presence array + threshold mirror
+    * (confAggExpr) become post-aggregation projections on the set column.
+    * The fused mixed plan inherits the value selectors' chained
+    * append-mode shape; a funnel of ONLY conf selectors skips the
+    * collapse stage (update-capable), like the single-selector conf path.
+    */
   private def fusedFunnel(q: Ast.Query, base: DataFrame,
                           withMeta: Boolean, store: StreamStore)
                          (implicit opts: CompileOpts): DataFrame = {

@@ -487,17 +487,5 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val quant = planOf(pipeline.Similarity.ivfSq8QuantTopK(
       emb, queries, 8, 64, k = 5))
     assert(!quant.contains("CartesianProduct"), quant.take(3000))
-    // the sq8 append merge keeps the keyed full-outer shape
-    val cents = pipeline.Similarity.ivfCents(
-      emb.where(org.apache.spark.sql.functions.col("vec_id") < 60), 8)
-    val (packedBase, _) = streaming.SimStream.sq8Index(
-      emb.where(org.apache.spark.sql.functions.col("vec_id") < 60), 8)
-    val appended = streaming.SimStream.sq8IndexAppend(packedBase,
-      pipeline.Similarity.ivfAssign(
-        emb.where(org.apache.spark.sql.functions.col("vec_id") >= 60),
-        cents))
-    val mPlan = planOf(appended)
-    assert(!mPlan.contains("CartesianProduct"), mPlan.take(3000))
-    assert(mPlan.contains("FullOuter"), mPlan.take(3000))
   }
 }

@@ -28,14 +28,15 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bucketed tables join without any shuffle") {
     val sqlf = org.apache.spark.sql.functions
+    val dir = "/root/testdata/sf0.001"
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val li = Tables(spark, "/root/testdata/sf0.001", "lineitem")
-      val ord = Tables(spark, "/root/testdata/sf0.001", "orders")
-      Layout.writeBucketed(li, "li_bucketed", "l_orderkey", 8)
-      Layout.writeBucketed(ord, "ord_bucketed", "o_orderkey", 8)
-      val joined = spark.table("li_bucketed")
-        .join(spark.table("ord_bucketed"),
+      val li = graft.sources.BucketStore.bucketed(spark, dir, "lineitem",
+        "l_orderkey", 8)
+      val ord = graft.sources.BucketStore.bucketed(spark, dir, "orders",
+        "o_orderkey", 8)
+      val joined = spark.table(li)
+        .join(spark.table(ord),
           sqlf.col("l_orderkey") === sqlf.col("o_orderkey"))
         .groupBy(sqlf.col("o_orderpriority"))
         .agg(sqlf.count(sqlf.lit(1)).as("n"))
@@ -50,8 +51,6 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(joined.count() > 0)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS li_bucketed")
-      spark.sql("DROP TABLE IF EXISTS ord_bucketed")
     }
   }
 

@@ -117,29 +117,6 @@ class DocStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(st.map(_._1) == Set(1L))
   }
 
-  test("curate: dedup + the batch quality expressions, no extra shuffle") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val in = MemoryStream[Doc]
-    val out = DocStream.curate(in.toDF(), "1 minute")
-    val q = out.writeStream.format("memory").queryName("scurate")
-      .outputMode("append").start()
-    in.addData(doc(1000, 1, "the cat sat on the mat"))
-    q.processAllAvailable()
-    in.addData(doc(1001, 2, "the cat sat on the mat"))
-    q.processAllAvailable()
-    val rows = spark.sql(
-      "SELECT doc_id, quality FROM scurate ORDER BY doc_id").collect()
-    q.stop()
-    assert(rows.length == 1 && rows.head.getLong(0) == 1L)
-    // same numbers as the batch operator on the same text
-    val batch = graft.pipeline.TextOps.quality(
-      Seq((1L, "the cat sat on the mat")).toDF("doc_id", "text"))
-      .collect().head.getAs[Double]("quality")
-    assert(rows.head.getDouble(1) == batch)
-  }
-
   test("quota admission: counter state carries across batches, closes at" +
     " quota, frontier drops replays") {
     val s = spark

@@ -48,46 +48,6 @@ class SeriesStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("purchase.1", 60000L, 5.0, 1L)))
   }
 
-  test("sliding windows: a point lands in window/slide windows") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val in = MemoryStream[SeriesStream.Ev]
-    val out = SeriesStream.slidingAgg(in.toDF(), "2 minutes", "1 minute",
-      "30 seconds")
-    val q = out.writeStream.format("memory").queryName("slide")
-      .outputMode("update").start()
-    in.addData(ev(70, v = 6.0)) // t=01:10 → windows [00:00,02:00) and [01:00,03:00)
-    q.processAllAvailable()
-    val rows = spark.sql("SELECT ws, value FROM slide ORDER BY ws").collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    q.stop()
-    assert(rows.toSeq == Seq((0L, 6.0), (60000L, 6.0)))
-  }
-
-  test("session windows split on silence gaps") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val in = MemoryStream[SeriesStream.Ev]
-    val out = SeriesStream.sessionAgg(in.toDS().toDF(), "30 seconds",
-      "10 seconds")
-    // session windows only support append mode: sessions emit once the
-    // watermark passes their close
-    val q = out.writeStream.format("memory").queryName("sess")
-      .outputMode("append").start()
-    // burst 1: 0s,10s ; silence ; burst 2: 100s closes burst 1
-    in.addData(ev(0), ev(10), ev(100))
-    q.processAllAvailable()
-    in.addData(ev(200)) // advances watermark past burst 2's close
-    q.processAllAvailable()
-    val rows = spark.sql(
-      "SELECT session_start, n_points FROM sess ORDER BY session_start")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    q.stop()
-    assert(rows.toSeq.take(2) == Seq((0L, 2L), (100000L, 1L)))
-  }
-
   test("streaming derivate: per-series deltas across batches, late drops") {
     val s = spark
     import s.implicits._
