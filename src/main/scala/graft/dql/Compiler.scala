@@ -1,10 +1,9 @@
 package graft.dql
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Exact
-import graft.ops.{Aggrs, Trans}
+import graft.ops.{Aggrs, Combs, Trans}
 import Ast._
 import Resolver._
 
@@ -24,8 +23,6 @@ import Resolver._
   * dense spine (timeframe × series) is never materialized unless paid for.
   */
 final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
-  import Compiler._
-
   final case class CompileError(msg: String) extends RuntimeException(msg)
 
   /** compile a full query to one result frame:
@@ -121,15 +118,7 @@ final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
       col("value"))
     if (!withMeta) base
     else {
-      val md = sel.metadata.map { case (k, v) =>
-        val vs = v match {
-          case MStr(s)        => "\"" + s + "\""
-          case MNum(n, true)  => n.toLong.toString
-          case MNum(n, false) => n.toString
-        }
-        "\"" + k + "\": " + vs
-      }.mkString("{", ", ", "}")
-      base.withColumn("metadata", lit(md))
+      base.withColumn("metadata", lit(Unparse.metadataJson(sel.metadata)))
     }
   }
 
@@ -271,12 +260,11 @@ final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
           nProbe = args(2).toInt)
       case "sim_topk_pq" =>
         val emb = store.table(spark, "embeddings")
-        val (m, ksub) =
-          (DqlArtifacts.pqM(spark), DqlArtifacts.pqKsub(spark))
         val (idx, cbsRow, cents) = DqlArtifacts.pqIndex(spark, store,
-          DqlArtifacts.nCells(spark, store), m, ksub)
+          DqlArtifacts.nCells(spark, store), DqlArtifacts.PqM,
+          DqlArtifacts.PqKsub)
         graft.pipeline.Similarity.ivfPqTopKProbedOn(idx, cbsRow, cents,
-          emb.where(col("vec_id") < args.head.toLong), m,
+          emb.where(col("vec_id") < args.head.toLong), DqlArtifacts.PqM,
           DqlArtifacts.Dim, args(1).toInt, nProbe = args(2).toInt)
       // exact radius search rides the same IVF artifact as sim_topk:
       // all-cells probe + threshold filter ≡ brute rangeSearch, but the
@@ -365,54 +353,21 @@ final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
                           dense: Boolean): DataFrame = p match {
     case s @ RScan(bucket, path, _) =>
       leafCache.getOrElseUpdate((s, startMs, endMs, dense),
-        leaf(bucket, pathCond(path), startMs, endMs, dense))
+        leaf(bucket, getCond(path), startMs, endMs, dense))
 
     case RLookup(coll, path, where, gb, gf, _) =>
-      // lookup paths match as metric-path PREFIXES ('purchase' finds every
-      // purchase.<user> series), unlike get paths which match exactly
-      val cond = path.map(lookupPathCond).getOrElse(lit(true)) &&
-        where.map(tagCond).getOrElse(lit(true))
-      val base = leaf(coll, cond, startMs, endMs, dense)
+      val base = leaf(coll, lookupCond(path, where, store.tagCol),
+        startMs, endMs, dense)
       if (gb.isEmpty) base
       else {
         val cols = gb.map { case (ns, key) =>
           store.tagCol(ns, key).getOrElse(
             throw CompileError(s"unknown tag $ns:$key"))
         }
-        val gkeys = col("ts_ms") +: cols.map(col)
-        val grouped = (gf.get match {
-          case "sum" => base.groupBy(gkeys: _*)
-            .agg(Exact.dsum(col("value")).as("value"),
-              avg(col("confidence")).as("confidence"))
-          case "avg" => base.groupBy(gkeys: _*)
-            .agg(Exact.davg(col("value")).as("value"),
-              avg(col("confidence")).as("confidence"))
-          case "min" => base.groupBy(gkeys: _*)
-            .agg(min(col("value")).as("value"),
-              avg(col("confidence")).as("confidence"))
-          case "max" => base.groupBy(gkeys: _*)
-            .agg(max(col("value")).as("value"),
-              avg(col("confidence")).as("confidence"))
-          case f @ ("diff" | "product" | "quotient") =>
-            // non-commutative combinators fold the group's member values in
-            // lexicographic metric order (the deterministic analog of the
-            // reference's index-answer order, src/dql_resolver.erl:48-63);
-            // the fold is a pinned-order double fold, so it is bit-identical
-            // across engines without decimal routing
-            val op = f match {
-              case "diff"     => "acc - x"
-              case "product"  => "acc * x"
-              case "quotient" => "CASE WHEN x = CAST(0 AS DOUBLE) THEN acc ELSE acc / x END"
-            }
-            base.groupBy(gkeys: _*)
-              .agg(expr("array_sort(collect_list(struct(metric, value)))").as("arr"),
-                avg(col("confidence")).as("confidence"))
-              .withColumn("vals", expr("transform(arr, x -> x.value)"))
-              .withColumn("value", expr(
-                s"aggregate(slice(vals, 2, greatest(size(vals) - 1, 0)), " +
-                  s"element_at(vals, 1), (acc, x) -> $op)"))
-              .drop("arr", "vals")
-        }).withColumn("metric",
+        val grouped = Combs.groupUsing(gf.get,
+            base.groupBy(col("ts_ms") +: cols.map(col): _*),
+            avg(col("confidence")).as("confidence"))
+          .withColumn("metric",
             concat_ws(".", cols.map(c => col(c).cast("string")): _*))
         // restore the non-grouped tag columns as nulls (frame contract)
         store.tagCols.filterNot(cols.contains).foldLeft(grouped) {
@@ -462,30 +417,12 @@ final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
       // confidence channel. (Not a clamp: with htv=100 a point at 185 is
       // discarded, not counted as 100.) Null-valued gap rows pass through —
       // they carry the confidence-0 channel and aggregates skip null values.
-      val rounded = round(col("value"), 0).cast("long")
-      val in = in0.where(col("value").isNull ||
-        (rounded >= 0L && rounded <= htv))
-      val ints = rounded
+      val ints = Aggrs.histRecorded(col("value"))
+      val in = in0.where(col("value").isNull || (ints >= 0L && ints <= htv))
       // quantiles default to the exact order statistic (strictly inside any
-      // sf error bound); set spark.graft.dql.histogram.hdr=true to route
-      // them through the faithful HDR-bucketed sketch (expr/HdrHistogram):
-      // fixed memory per window, mergeable, quantiles at the bucket's
-      // highest equivalent value with relative error ≤ 10^-sf — the
-      // reference's actual reply semantics
-      val useHdr = spark.conf
-        .getOption("spark.graft.dql.histogram.hdr").contains("true")
-      val agg = name match {
-        case "min"    => min(ints).cast("double")
-        case "max"    => max(ints).cast("double")
-        case "mean"   => Exact.davg(ints)
-        case "stddev" => Exact.dstddevPop(ints)
-        case "median" if useHdr =>
-          graft.expr.HdrHistogram.hdrPercentile(sf, 0.5)(ints)
-        case "percentile" if useHdr =>
-          graft.expr.HdrHistogram.hdrPercentile(sf, pOpt.get)(ints)
-        case "median" => kth(ints, 0.5).cast("double")
-        case "percentile" => kth(ints, pOpt.get).cast("double")
-      }
+      // sf error bound); Aggrs.HdrConf routes them through the HDR sketch
+      val useHdr = Aggrs.hdrQuantiles(spark)
+      val agg = Aggrs.hist(name, pOpt, sf, useHdr)(ints)
       // the EXACT hist quantile is the same holistic collect-and-sort as
       // the plain percentile, so it salts under the same plan-time bound
       // (see the RAggr salted case). The HDR sketch path never salts: its
@@ -526,10 +463,8 @@ final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
       // "aggregation averages it"); the value channel combines per `name`
       val conf = avg(col("confidence")).as("confidence")
       val combined = name match {
-        case "sum" => all.groupBy("ts_ms").agg(Exact.dsum(col("value")).as("value"), conf)
-        case "avg" => all.groupBy("ts_ms").agg(Exact.davg(col("value")).as("value"), conf)
-        case "min" => all.groupBy("ts_ms").agg(min(col("value")).as("value"), conf)
-        case "max" => all.groupBy("ts_ms").agg(max(col("value")).as("value"), conf)
+        case "sum" | "avg" | "min" | "max" => all.groupBy("ts_ms")
+          .agg(Combs.pooled(name, col("value")).as("value"), conf)
         case _ =>
           val n = children.length
           // per-child row counts ride the pivot: a non-commutative
@@ -542,16 +477,7 @@ final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
             max(when(col("cidx") === i, col("value"))).as(s"c$i"),
             count(when(col("cidx") === i, 1)).as(s"n$i"))) :+ conf
           val piv = all.groupBy("ts_ms").agg(pivots.head, pivots.tail: _*)
-          val folded = name match {
-            case "diff" =>
-              (1 until n).foldLeft[Column](col("c0"))((a, i) => a - col(s"c$i"))
-            case "product" =>
-              (1 until n).foldLeft[Column](col("c0"))((a, i) => a * col(s"c$i"))
-            case "quotient" =>
-              (1 until n).foldLeft[Column](col("c0")) { (a, i) =>
-                when(col(s"c$i") === 0.0, a).otherwise(a / col(s"c$i"))
-              }
-          }
+          val folded = Combs.fold(name, (0 until n).map(i => col(s"c$i")))
           val oneEach = (0 until n).map(i => col(s"n$i") <= 1L)
             .reduce(_ && _)
           piv.select(col("ts_ms"),
@@ -577,8 +503,8 @@ final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
 
   private def saltedPercentile: Boolean = spark.conf
     .getOption("spark.graft.dql.percentile.salted").contains("true")
-  private def saltCount: Int = spark.conf
-    .getOption("spark.graft.dql.percentile.salts").map(_.toInt).getOrElse(16)
+  /** phase-1 salts of the skew path's two-phase percentile */
+  private val saltCount = 16
   private def saltedAutoRows: Long = spark.conf
     .getOption("spark.graft.dql.percentile.salted.autoRows")
     .map(_.toLong).getOrElse(1000000L)
@@ -587,13 +513,6 @@ final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
   private def groupWindow(in: DataFrame, w: Long) =
     in.groupBy(Seq(col("metric")) ++ store.tagCols.map(col) :+
       Exact.wstart(col("ts_ms"), w).as("ts_ms"): _*)
-
-  // delegates to the shared bounded kth: the fused-histogram exact
-  // quantile collects the whole window per group, and the
-  // KthGroupRowBound loud-failure backstop must cover it exactly like
-  // the plain percentile path (r17 review: this was an unguarded copy)
-  private def kth(v: Column, p: Double): Column =
-    graft.ops.Aggrs.kthBounded(v, p, graft.ops.Aggrs.KthGroupRowBound)
 
   // ----------------------------------------------------------- leaves
 
@@ -633,38 +552,6 @@ final class Compiler(spark: SparkSession, store: SeriesStore, nowMs: Long) {
         .withColumn("confidence",
           when(col("value").isNotNull, 1.0).otherwise(0.0))
     }
-  }
-
-  private def lookupPathCond(path: Seq[String]): Column = {
-    val parts = split(col("metric"), "\\.")
-    path.zipWithIndex.map { case (p, i) =>
-      element_at(parts, i + 1) === p
-    }.foldLeft(size(parts) >= path.length)(_ && _)
-  }
-
-  private def pathCond(path: Seq[String]): Column =
-    if (!path.contains("*")) col("metric") === path.mkString(".")
-    else {
-      val parts = split(col("metric"), "\\.")
-      val sizeOk = size(parts) === path.length
-      path.zipWithIndex.collect {
-        case (p, i) if p != "*" => element_at(parts, i + 1) === p
-      }.foldLeft(sizeOk)(_ && _)
-    }
-
-  private def tagCond(f: TagFilter): Column = f match {
-    case TagEq(ns, key, v) =>
-      store.tagCol(ns, key) match {
-        case Some(c) => col(c).cast("string") === v
-        case None    => lit(false)
-      }
-    case TagNeq(ns, key, v) =>
-      store.tagCol(ns, key) match {
-        case Some(c) => col(c).cast("string") =!= v
-        case None    => lit(true)
-      }
-    case TagAnd(a, b) => tagCond(a) && tagCond(b)
-    case TagOr(a, b)  => tagCond(a) || tagCond(b)
   }
 
   private def eventCond(ev: DataFrame, f: EventFilter): Column = f match {

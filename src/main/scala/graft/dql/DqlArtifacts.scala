@@ -116,22 +116,12 @@ object DqlArtifacts {
       Similarity.lshPrep(store.table(spark, "embeddings"), bits, Dim)
     }
 
-  /** fixture-pinned PQ shape constants (what the `dql_pipeline_simtopk_pq`
-    * oracle bakes in) — conf-first like the other sizing knobs:
-    * `spark.graft.dql.sim.pq.m` / `.ksub` pin explicit values, read live;
-    * unset falls back to these (m = 8 subspaces of Dim/8 dims, ksub = 16
-    * entries — 8 codes/vector, the 32× compression rung).
+  /** fixture-pinned PQ shape (what the `dql_pipeline_simtopk_pq` oracle
+    * bakes in): m = 8 subspaces of Dim/8 dims, ksub = 16 entries — 8
+    * codes/vector, the 32× compression rung.
     */
   val PqM = 8
   val PqKsub = 16
-
-  def pqM(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.dql.sim.pq.m")
-      .map(posInt("spark.graft.dql.sim.pq.m", _)).getOrElse(PqM)
-
-  def pqKsub(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.dql.sim.pq.ksub")
-      .map(posInt("spark.graft.dql.sim.pq.ksub", _)).getOrElse(PqKsub)
 
   private val sq8Memo =
     new ArtifactMemo[(SparkSession, String, Int), (DataFrame, DataFrame)]

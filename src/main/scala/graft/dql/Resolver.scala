@@ -1,5 +1,7 @@
 package graft.dql
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{col, element_at, lit, size, split}
 import Ast._
 
 /** Function/type resolution (reference: `src/dql_resolver.erl:12-129` +
@@ -170,7 +172,7 @@ object Resolver {
       // metric_list signature lookup (src/dql_resolver.erl:48-63);
       // non-commutative funs (diff/product/quotient) fold group members in
       // lexicographic metric order — the deterministic analog of the
-      // reference's index-answer order (see Compiler's RLookup case)
+      // reference's index-answer order (see Combs.groupUsing)
       gf.foreach { f =>
         if (!combs.contains(f))
           throw ResolveError(s"GROUP BY USING '$f': not a combinator " +
@@ -341,6 +343,52 @@ object Resolver {
       s"${p.name}(...) is a table function over the corpus — it cannot " +
         s"feed $ctx")
     case other => other
+  }
+
+  // ----------------------------------------------- selector predicates
+  //
+  // Row predicates over a series frame's `metric` key and tag columns,
+  // shared by the batch and the streaming compiler. `tagCol` is the
+  // store's tag map, (ns, key) → column name.
+
+  /** get path: an exact get compares the whole key; a glob compares
+    * segment by segment, `*` matching any one segment
+    */
+  def getCond(path: Seq[String]): Column =
+    if (!path.contains("*")) col("metric") === path.mkString(".")
+    else segmentCond(path, exact = true)
+
+  /** lookup selection: the path is a metric-path PREFIX ('purchase' finds
+    * every purchase.<user> series) in which `*` is a wildcard segment,
+    * AND-ed with the tag WHERE filter
+    */
+  def lookupCond(path: Option[Seq[String]], where: Option[TagFilter],
+                 tagCol: (String, String) => Option[String]): Column =
+    path.map(segmentCond(_, exact = false)).getOrElse(lit(true)) &&
+      where.map(tagCond(_, tagCol)).getOrElse(lit(true))
+
+  private def segmentCond(path: Seq[String], exact: Boolean): Column = {
+    val parts = split(col("metric"), "\\.")
+    val sizeOk =
+      if (exact) size(parts) === path.length else size(parts) >= path.length
+    path.zipWithIndex.collect {
+      case (p, i) if p != "*" => element_at(parts, i + 1) === p
+    }.foldLeft(sizeOk)(_ && _)
+  }
+
+  /** tag WHERE over string-compared tag columns; a tag the store does not
+    * map never matches `=` and always matches `!=`
+    */
+  def tagCond(f: TagFilter,
+              tagCol: (String, String) => Option[String]): Column = f match {
+    case TagEq(ns, key, v) =>
+      tagCol(ns, key).map(c => col(c).cast("string") === v)
+        .getOrElse(lit(false))
+    case TagNeq(ns, key, v) =>
+      tagCol(ns, key).map(c => col(c).cast("string") =!= v)
+        .getOrElse(lit(true))
+    case TagAnd(a, b) => tagCond(a, tagCol) && tagCond(b, tagCol)
+    case TagOr(a, b)  => tagCond(a, tagCol) || tagCond(b, tagCol)
   }
 
   private def mkTrans(n: String, c: Option[Double], child: RExpr): RTrans =

@@ -92,6 +92,20 @@ object Unparse {
     case MNum(n, false)    => n.toString
   }
 
+  /** METADATA {…} as the constant JSON object both compilers attach to
+    * a selector's rows: keys and strings double-quoted, integral numbers
+    * without a fraction
+    */
+  def metadataJson(md: Seq[(String, MetaVal)]): String =
+    md.map { case (k, v) =>
+      val vs = v match {
+        case MStr(s)        => "\"" + s + "\""
+        case MNum(n, true)  => n.toLong.toString
+        case MNum(n, false) => n.toString
+      }
+      "\"" + k + "\": " + vs
+    }.mkString("{", ", ", "}")
+
   def selector(s: Selector): String = {
     val base = expr(s.expr)
     val sh = s.shift.fold("")(t => s" SHIFT BY ${t.n} ${t.unit}")

@@ -1,6 +1,7 @@
 package graft.entry
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.core.{Exact, SeriesOps}
 import graft.dql.{Compiler, Parser, TestdataStore, Unparse}
 
@@ -58,7 +59,7 @@ object DqlQueries extends QueryProvider {
     "dql_hist_htv" ->
       s"SELECT percentile(histogram('purchase'.'3' BUCKET 'testdata', 100, 3, 1 h), 0.9) BETWEEN $T0 AND $T1",
     // same query through the faithful HDR-bucketed sketch
-    // (spark.graft.dql.histogram.hdr=true, set by the gate runner): sf=1
+    // (Aggrs.HdrConf=true, set by the gate runner): sf=1
     // gives sub-bucket count 32, so values ≥ 32 are genuinely quantized
     // and the quantile reports the bucket's highest equivalent value —
     // the oracle mirrors the bucket math, not the exact order statistic
@@ -209,17 +210,15 @@ object DqlQueries extends QueryProvider {
       (("SELECT sim_range_brute(5, 0.3) LAST 30 d",
         Seq("query_id", "vec_id"))))
 
-  /** Store over the BASE subset of the embeddings corpus for the IVF
-    * refresh gate: everything except the append delta (delta = ids ≥
-    * nCells with vec_id % 5 = 0; the quantizer rows vec_id < nCells
-    * stay in base so the frozen quantizer equals the full-corpus
-    * rebuild's — the regime where append ≡ rebuild bit-for-bit).
-    * Distinct corpusKey: the subset must never share the full corpus's
-    * memoized artifacts.
+  /** Store over the BASE subset of one corpus table for a refresh gate:
+    * `table` reads through `basePred`, every other table and the series
+    * binding read the full testdata dir. The corpusKey gets `keySuffix`,
+    * so the subset never shares the full corpus's memoized artifacts.
     */
-  private final class IvfBaseStore(d: String) extends graft.dql.SeriesStore {
+  private final class BaseStore(d: String, table: String, basePred: Column,
+                                keySuffix: String) extends graft.dql.SeriesStore {
     private val inner = new TestdataStore(d)
-    override def corpusKey: String = d + "#ivf-append-base"
+    override def corpusKey: String = d + keySuffix
     def resolutionMs(bucket: String): Long = inner.resolutionMs(bucket)
     def series(s: SparkSession, bucket: String): DataFrame =
       inner.series(s, bucket)
@@ -230,40 +229,24 @@ object DqlQueries extends QueryProvider {
       inner.events(s, bucket)
     override def table(s: SparkSession, name: String): DataFrame = {
       val t = inner.table(s, name)
-      if (name == "embeddings") t.where(ivfBasePred) else t
+      if (name == table) t.where(basePred) else t
     }
-  }
-  private def ivfBasePred: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.col
-    col("vec_id") < graft.dql.DqlArtifacts.NCells ||
-      col("vec_id") % 5 =!= 0
   }
 
-  /** Store over the BASE subset of the documents corpus for the
-    * band-index refresh gate (delta = doc_id % 5 = 0 — all-new ids, the
-    * append regime). Distinct corpusKey like [[IvfBaseStore]]: the
-    * subset must never share the full corpus's memoized artifacts.
+  /** IVF refresh base: every embedding except the append delta (delta =
+    * ids ≥ nCells with vec_id % 5 = 0; the quantizer rows vec_id < nCells
+    * stay in base so the frozen quantizer equals the full-corpus
+    * rebuild's — the regime where append ≡ rebuild bit-for-bit).
     */
-  private final class BandBaseStore(d: String) extends graft.dql.SeriesStore {
-    private val inner = new TestdataStore(d)
-    override def corpusKey: String = d + "#band-append-base"
-    def resolutionMs(bucket: String): Long = inner.resolutionMs(bucket)
-    def series(s: SparkSession, bucket: String): DataFrame =
-      inner.series(s, bucket)
-    def tagCol(ns: String, key: String): Option[String] =
-      inner.tagCol(ns, key)
-    val tagCols: Seq[String] = Seq("mtype", "muser")
-    def events(s: SparkSession, bucket: String): DataFrame =
-      inner.events(s, bucket)
-    override def table(s: SparkSession, name: String): DataFrame = {
-      val t = inner.table(s, name)
-      if (name == "documents") t.where(bandBasePred) else t
-    }
-  }
-  private def bandBasePred: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.col
-    col("doc_id") % 5 =!= 0
-  }
+  private def ivfBasePred: Column =
+    col("vec_id") < graft.dql.DqlArtifacts.NCells || col("vec_id") % 5 =!= 0
+
+  /** band-index refresh base: every document except the delta (doc_id %
+    * 5 = 0 — all-new ids, the append regime)
+    */
+  private def bandBaseStore(d: String) =
+    new BaseStore(d, "documents", bandBasePred, "#band-append-base")
+  private def bandBasePred: Column = col("doc_id") % 5 =!= 0
 
   /** default name literal for a selector, exactly as the engine renders */
   private def nameOf(key: String, sel: Int = 0): String =
@@ -274,7 +257,7 @@ object DqlQueries extends QueryProvider {
     * time, so it is set/restored around plan construction only
     */
   private val gateConfs: Map[String, (String, String)] = Map(
-    "dql_hist_hdr" -> ("spark.graft.dql.histogram.hdr" -> "true"),
+    "dql_hist_hdr" -> (graft.ops.Aggrs.HdrConf -> "true"),
     "dql_percentile_salted" -> ("spark.graft.dql.percentile.salted" -> "true"))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
@@ -291,7 +274,7 @@ object DqlQueries extends QueryProvider {
     } ++ pipeDqls.map { case (key, (dql, order)) =>
       key -> ((s: SparkSession, d: String) =>
         Compiler.run(s, new TestdataStore(d), NowMs, dql)
-          .orderBy(order.map(org.apache.spark.sql.functions.col): _*))
+          .orderBy(order.map(col): _*))
     } + ("dql_pipeline_simtopk_refresh" -> ivfRefreshGate _) +
       ("dql_pipeline_neardup_refresh" -> bandRefreshGate _) +
       ("dql_pipeline_spans_refresh" -> gramRefreshGate _)
@@ -305,8 +288,8 @@ object DqlQueries extends QueryProvider {
     * the proof that append maintenance loses nothing.
     */
   private def ivfRefreshGate(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val baseStore = new IvfBaseStore(d)
+    val baseStore =
+      new BaseStore(d, "embeddings", ivfBasePred, "#ivf-append-base")
     val emb = graft.core.Tables(s, d, "embeddings")
     val delta = emb.where(!ivfBasePred)
     val (cells, cents) = graft.dql.DqlArtifacts.ivfRefresh(
@@ -327,7 +310,7 @@ object DqlQueries extends QueryProvider {
     * proof that append maintenance loses nothing.
     */
   private def bandRefreshGate(s: SparkSession, d: String): DataFrame = {
-    val baseStore = new BandBaseStore(d)
+    val baseStore = bandBaseStore(d)
     val delta = graft.core.Tables(s, d, "documents").where(!bandBasePred)
     val refreshed = graft.dql.DqlArtifacts.bandRefresh(
       s, baseStore, deltaId = "mod5-docs", delta = delta)
@@ -344,7 +327,7 @@ object DqlQueries extends QueryProvider {
     * rebuild oracle.
     */
   private def gramRefreshGate(s: SparkSession, d: String): DataFrame = {
-    val baseStore = new BandBaseStore(d)
+    val baseStore = bandBaseStore(d)
     val delta = graft.core.Tables(s, d, "documents").where(!bandBasePred)
     val refreshed = graft.dql.DqlArtifacts.gramRefresh(
       s, baseStore, deltaId = "mod5-docs", delta = delta, n = 8)

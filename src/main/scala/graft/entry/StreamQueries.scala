@@ -186,11 +186,12 @@ object StreamQueries extends QueryProvider {
     * for CONSTANTLY-WRITTEN dirs: a live drain's checkpoint is written
     * every micro-batch and every gate is bounded, so idle >
     * [[StaleIdleMs]] means a dead owner. Write-once staged CORPUS dirs
-    * must never go through here — a concurrent harness reads them
-    * without ever touching their mtime (r19 review). Returns the number
+    * under a current name must never go through here — a concurrent
+    * harness reads them without ever touching their mtime (r19 review);
+    * those under a retired name have no reader left. Returns the number
     * of entries deleted (best-effort, 0 on error).
     */
-  private val StaleIdleMs = 15L * 60 * 1000
+  private[entry] val StaleIdleMs = 15L * 60 * 1000
 
   /** Newest mtime across a dir and its IMMEDIATE children (r19 advice:
     * Spark writes per-micro-batch files INSIDE the checkpoint's
@@ -213,7 +214,7 @@ object StreamQueries extends QueryProvider {
     m
   }
 
-  private def sweepStale(root: java.nio.file.Path,
+  private[entry] def sweepStale(root: java.nio.file.Path,
                          prefixes: Seq[String]): Int = {
     var swept = 0
     try {
@@ -236,12 +237,19 @@ object StreamQueries extends QueryProvider {
         s"[stream] swept $swept stale staging entr(ies) under $root")
     swept
   }
+  /** Prefixes the class-init sweep removes: dead-run checkpoints, and
+    * staged corpora under the retired `graft-stream-{src,docs,emb}-`
+    * names, which nothing reads any more. The current
+    * `graft-stream-<table>-` copies stay (see [[stageCopy]]).
+    */
+  private[entry] val SweptPrefixes = Seq("graft-ckpt-", "graft-stream-src-",
+    "graft-stream-docs-", "graft-stream-emb-")
   // the sweep the drain's cleanup message promises: once per JVM, at
   // class init, before any new checkpoint is cut — on BOTH roots a
   // checkpoint can land on (the disk-backed fallback leaks just the
   // same when a JVM dies mid-gate)
-  sweepStale(ReplayRoot, Seq("graft-ckpt-"))
-  if (TmpRoot != ReplayRoot) sweepStale(TmpRoot, Seq("graft-ckpt-"))
+  sweepStale(ReplayRoot, SweptPrefixes)
+  if (TmpRoot != ReplayRoot) sweepStale(TmpRoot, SweptPrefixes)
 
   /** Staging headroom exhausted on the preferred root — callers fall back
     * to the disk-backed [[TmpRoot]] for this corpus.

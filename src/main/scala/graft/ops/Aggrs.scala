@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Exact
 
@@ -99,6 +99,39 @@ object Aggrs {
       case "last_above"  => (v, ts) => max_by(v, when(v > k, ts))
       case "last_below"  => (v, ts) => max_by(v, when(v < k, ts))
     }
+  }
+
+  /** Session setting that routes the fused-histogram quantiles through
+    * the HDR-bucketed sketch (expr/HdrHistogram) instead of the exact
+    * order statistic; read at compile time by both DQL compilers.
+    */
+  val HdrConf = "spark.graft.dql.histogram.hdr"
+
+  def hdrQuantiles(spark: SparkSession): Boolean =
+    spark.conf.getOption(HdrConf).contains("true")
+
+  /** HDR recording of a value channel: int-round (the caller drops points
+    * outside [0, htv], which the reference's histogram never records) */
+  def histRecorded(v: Column): Column = round(v, 0).cast("long")
+
+  /** The §2.7 fused histogram reductions over recorded values `ints`.
+    * Quantiles are the exact order statistic unless `hdr`: then they come
+    * from the faithful HDR sketch — fixed memory per window, mergeable,
+    * reported at the bucket's highest equivalent value with relative error
+    * ≤ 10^-sf, the reference's actual reply semantics.
+    */
+  def hist(name: String, p: Option[Double], sf: Int,
+           hdr: Boolean)(ints: Column): Column = name match {
+    case "min"    => min(ints).cast("double")
+    case "max"    => max(ints).cast("double")
+    case "mean"   => Exact.davg(ints)
+    case "stddev" => Exact.dstddevPop(ints)
+    case "median" if hdr =>
+      graft.expr.HdrHistogram.hdrPercentile(sf, 0.5)(ints)
+    case "percentile" if hdr =>
+      graft.expr.HdrHistogram.hdrPercentile(sf, p.get)(ints)
+    case "median"     => kth(ints, 0.5).cast("double")
+    case "percentile" => kth(ints, p.get).cast("double")
   }
 
   /** DuckDB mirror; `v`/`ts` are SQL expressions for the two channels. */

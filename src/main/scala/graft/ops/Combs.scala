@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import graft.core.Exact
 
@@ -20,34 +20,71 @@ import graft.core.Exact
   * Shape: one shuffle (groupBy ts). The order-sensitive path pivots the N
   * named series into columns with conditional aggregation — N is the arity
   * of the query, always small, so the fold is a plain codegen'd expression.
+  *
+  * [[pooled]], [[fold]] and [[groupUsing]] are the only definitions of the
+  * combine functions: the batch DQL compiler (combinators and GROUP BY …
+  * USING) and the streaming one call them too.
   */
 object Combs {
   val names: Seq[String] = Seq("sum", "avg", "min", "max", "diff", "product",
     "quotient")
+
+  /** sum/avg/min/max: one aggregate over every value pooled at a point */
+  def pooled(op: String, v: Column): Column = op match {
+    case "sum" => Exact.dsum(v)
+    case "avg" => Exact.davg(v)
+    case "min" => min(v)
+    case "max" => max(v)
+  }
+
+  /** diff/product/quotient: a left fold over the operand columns in
+    * argument order; a NULL operand makes the point NULL */
+  def fold(op: String, operands: Seq[Column]): Column =
+    operands.reduceLeft[Column]((a, c) => op match {
+      case "diff"     => a - c
+      case "product"  => a * c
+      case "quotient" => when(c === 0.0, a).otherwise(a / c)
+    })
+
+  /** GROUP BY … USING `op` over the member series' (metric, value) rows:
+    * `value` per group, beside `extra` aggregates. The order-sensitive ops
+    * fold the members' values in lexicographic metric order (the
+    * deterministic analog of the reference's index-answer order,
+    * src/dql_resolver.erl:48-63); the fold is a pinned-order double fold,
+    * so it is bit-identical across engines without decimal routing.
+    */
+  def groupUsing(op: String, g: RelationalGroupedDataset,
+                 extra: Column*): DataFrame = op match {
+    case "sum" | "avg" | "min" | "max" =>
+      g.agg(pooled(op, col("value")).as("value"), extra: _*)
+    case _ =>
+      val step = op match {
+        case "diff"     => "acc - x"
+        case "product"  => "acc * x"
+        case "quotient" => "CASE WHEN x = CAST(0 AS DOUBLE) THEN acc ELSE acc / x END"
+      }
+      g.agg(expr("array_sort(collect_list(struct(metric, value)))").as("arr"),
+          extra: _*)
+        .withColumn("vals", expr("transform(arr, x -> x.value)"))
+        .withColumn("value", expr(
+          s"aggregate(slice(vals, 2, greatest(size(vals) - 1, 0)), " +
+            s"element_at(vals, 1), (acc, x) -> $step)"))
+        .drop("arr", "vals")
+  }
 
   /** input: (metric, ts, value)-shaped frame; output: (ts, value). */
   def combine(df: DataFrame, metrics: Seq[String], op: String,
               tsCol: String = "ts_ms"): DataFrame = {
     val f = df.where(col("metric").isin(metrics: _*))
     op match {
-      case "sum" => f.groupBy(tsCol).agg(Exact.dsum(col("value")).as("value"))
-      case "avg" => f.groupBy(tsCol).agg(Exact.davg(col("value")).as("value"))
-      case "min" => f.groupBy(tsCol).agg(min(col("value")).as("value"))
-      case "max" => f.groupBy(tsCol).agg(max(col("value")).as("value"))
       case "diff" | "product" | "quotient" =>
         val pivots = metrics.zipWithIndex.map { case (m, i) =>
           max(when(col("metric") === m, col("value"))).as(s"c$i")
         }
         val piv = f.groupBy(tsCol).agg(pivots.head, pivots.tail: _*)
-        val rest = metrics.indices.tail
-        val folded: Column = op match {
-          case "diff"    => rest.foldLeft(col("c0"))((a, i) => a - col(s"c$i"))
-          case "product" => rest.foldLeft(col("c0"))((a, i) => a * col(s"c$i"))
-          case "quotient" => rest.foldLeft(col("c0")) { (a, i) =>
-            when(col(s"c$i") === 0.0, a).otherwise(a / col(s"c$i"))
-          }
-        }
-        piv.select(col(tsCol), folded.as("value"))
+        piv.select(col(tsCol),
+          fold(op, metrics.indices.map(i => col(s"c$i"))).as("value"))
+      case _ => f.groupBy(tsCol).agg(pooled(op, col("value")).as("value"))
     }
   }
 

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.dql.{Ast, Parser, Resolver, Unparse}
-import graft.dql.Ast.{MNum, MStr, NLit, NPos, NTag}
+import graft.dql.Ast.{NLit, NPos, NTag}
 import graft.dql.Resolver._
-import graft.ops.{Aggrs, Trans}
+import graft.ops.{Aggrs, Combs, Trans}
 
 /** DQL on Structured Streaming: the SAME query text the batch engine runs
   * (graft.dql.Compiler) compiled against an unbounded event stream —
@@ -56,6 +56,18 @@ import graft.ops.{Aggrs, Trans}
   *     per-series raw scan), nested derivate (no event time out of
   *     flatMapGroupsWithState), combinators over differently-windowed
   *     children, TOP/BOTTOM (global sorts).
+  *   - KNOWN DIVERGENCE, combinators over a child that matches several
+  *     series: the stream POOLS the child's series into one operand,
+  *     while batch combines every per-series result (sum/avg/min/max) or
+  *     raises "ONE series per child" (diff/product/quotient). On the
+  *     StreamBatchEquivalenceSpec replay,
+  *     `sum(avg('purchase'.*, 1 m), avg('error'.'1', 1 m))` reads 14.538
+  *     in batch and 9.623 in stream for the window at 60000 ms, and
+  *     `diff('purchase'.*, 'error'.'1')` raises in batch while the stream
+  *     returns a row for each of the replay's 600 one-second slots. The
+  *     `stream_dql_raw_comb` and `stream_comb_diff` gates pin the pooled
+  *     form. The combine functions themselves are
+  *     the batch's ([[graft.ops.Combs]]); only the operand differs.
   *
   * Slot collapse (the batch series model, on by default): the batch
   * engine never aggregates raw events — its leaf first collapses them to
@@ -310,16 +322,9 @@ object StreamingDql {
                              withMeta: Boolean, store: StreamStore,
                              plans: Seq[RExpr])
                             (implicit opts: CompileOpts): DataFrame = {
-    val res = plans.map(_.resMs).distinct
-    if (res.length != 1)
-      throw Unstreamable("resolution_conflict: multi-selector streams " +
-        s"must share one resolution, got ${res.mkString(", ")} ms")
-    val condVals = plans.map(leafCondValue(_, store))
-    val anyCond = condVals.map(_._1).reduce(_ || _)
-    val collapsed = slotCollapse(base.where(anyCond), res.head, store)
-    val branches = condVals.zipWithIndex.map { case ((cond, v), i) =>
-      when(cond, struct(lit(i).as("sid"), v.cast("double").as("v")))
-    }
+    val res = shared(plans.map(_.resMs),
+      "multi-selector streams must share one resolution")
+    val (collapsed, copies) = explodeLeaves(plans, base, store, res, "sid")
     val wsCol =
       if (collapsed.columns.contains("sw")) unix_millis(col("sw.start"))
       else unix_millis(col("ts"))
@@ -333,8 +338,7 @@ object StreamingDql {
         when(col("sid") === i, lit(ms)).otherwise(acc)
       }
     val ex = collapsed
-      .withColumn("c",
-        explode(filter(array(branches: _*), b => b.isNotNull)))
+      .withColumn("c", copies)
       .withColumn("sid", col("c.sid"))
       .withColumn("ws", wsCol + shiftCol)
       .withColumn("value", col("c.v"))
@@ -343,7 +347,7 @@ object StreamingDql {
       ex.select(nameCol.as("name"), col("metric"), col("ws"), col("value"))
     else
       ex.select(nameCol.as("name"), col("metric"), col("ws"), col("value"),
-        bySid(q.selectors.map(s => lit(metaJson(s)))).as("metadata"))
+        bySid(q.selectors.map(metaCol)).as("metadata"))
   }
 
   /** The batch multi-selector merge (`dqe_funnel`) FUSED into one stateful
@@ -400,18 +404,14 @@ object StreamingDql {
     }
     val peeled = plans.map(peel(_, Nil))
     val aggrs = peeled.map(_._2)
-    val ws = aggrs.map(_.windowMs).distinct
-    if (ws.length != 1)
-      throw Unstreamable("resolution_conflict: multi-selector streams " +
-        s"must share one window, got ${ws.mkString(", ")} ms")
-    val res = aggrs.map(_.child.resMs).distinct
-    if (res.length != 1)
-      throw Unstreamable("resolution_conflict: multi-selector streams " +
-        s"must share one resolution, got ${res.mkString(", ")} ms")
+    val ws = shared(aggrs.map(_.windowMs),
+      "multi-selector streams must share one window")
+    val res = shared(aggrs.map(_.child.resMs),
+      "multi-selector streams must share one resolution")
     val isConf = aggrs.map(_.name.endsWith("_conf"))
     // conf selectors share the single-selector path's window/state checks
     aggrs.zip(isConf).collectFirst { case (a, true) => a }
-      .foreach(a => confSlots(base, a.name, ws.head, res.head))
+      .foreach(a => confSlots(base, a.name, ws, res))
     val condVals = aggrs.map(a => leafCondValue(a.child, store))
     val anyCond = condVals.map(_._1).reduce(_ || _)
     // an all-conf funnel needs no slot collapse (presence is
@@ -419,14 +419,14 @@ object StreamingDql {
     // shape of the single-selector conf path
     val collapsed =
       if (isConf.forall(identity)) base.where(anyCond)
-      else slotCollapse(base.where(anyCond), res.head, store)
+      else slotCollapse(base.where(anyCond), res, store)
     // present-slot id on whichever frame the fused groupBy reads: the
     // collapse keeps the slot window struct `sw` (slot start IS the id
     // base); without it the raw event time addresses the slot
     val sidSql =
       if (collapsed.columns.contains("sw"))
-        s"unix_millis(sw.start) div ${res.head}"
-      else s"unix_millis(ts) div ${res.head}"
+        s"unix_millis(sw.start) div $res"
+      else s"unix_millis(ts) div $res"
     val aggCols = aggrs.zip(condVals).zipWithIndex.flatMap {
       case ((a, (cond, _)), i) if a.name.endsWith("_conf") =>
         // conf selector: collect ITS present-slot set (when() nulls out
@@ -441,16 +441,16 @@ object StreamingDql {
           (count(when(cond, 1)) > 0).as(s"p$i"))
     }
     val piv0 = collapsed
-      .groupBy(timeWindow(collapsed, ws.head, res.head).as("w"), col("metric"))
+      .groupBy(timeWindow(collapsed, ws, res).as("w"), col("metric"))
       .agg(aggCols.head, aggCols.tail: _*)
     // conf values: synthesize each selector's {0,1} presence array from
     // its slot set and run the batch aggregate mirror — stateless
     // projections on the aggregated stream
     val piv = aggrs.zipWithIndex.foldLeft(piv0) {
       case (df, (a, i)) if a.name.endsWith("_conf") =>
-        val slots = ws.head / res.head
+        val slots = ws / res
         val ca = s"transform(sequence(0, ${slots - 1}), j -> " +
-          s"IF(array_contains(set$i, unix_millis(w.start) div ${res.head} + j), " +
+          s"IF(array_contains(set$i, unix_millis(w.start) div $res + j), " +
           s"1.0D, 0.0D))"
         df.withColumn(s"c$i",
           confAggExpr(a.name.stripSuffix("_conf"), a.const, slots, ca))
@@ -490,8 +490,7 @@ object StreamingDql {
     val outCols =
       Seq(perSel(nameExpr(_, store)).as("name"), col("metric"),
         (unix_millis(col("w.start")) + shiftCol).as("ws"), col("value")) ++
-      (if (withMeta) Seq(perSel(sel => lit(metaJson(sel))).as("metadata"))
-       else Nil)
+      (if (withMeta) Seq(perSel(metaCol).as("metadata")) else Nil)
     stacked.select(outCols: _*)
   }
 
@@ -535,21 +534,14 @@ object StreamingDql {
     }
   }
 
-  private def metaJson(sel: Ast.Selector): String =
-    sel.metadata.map { case (k, v) =>
-      val vs = v match {
-        case MStr(s)        => "\"" + s + "\""
-        case MNum(n, true)  => n.toLong.toString
-        case MNum(n, false) => n.toString
-      }
-      "\"" + k + "\": " + vs
-    }.mkString("{", ", ", "}")
+  private def metaCol(sel: Ast.Selector): Column =
+    lit(Unparse.metadataJson(sel.metadata))
 
   private def named(df: DataFrame, sel: Ast.Selector,
                     withMeta: Boolean, store: StreamStore): DataFrame = {
     val base = df.withColumn("name", nameExpr(sel, store))
     if (!withMeta) base
-    else base.withColumn("metadata", lit(metaJson(sel)))
+    else base.withColumn("metadata", metaCol(sel))
   }
 
   /** The stream's native slot resolution: every incoming series collapses
@@ -560,18 +552,18 @@ object StreamingDql {
     * ([[timeWindow]]'s straddle guard).
     */
   private def resolutionMs(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("spark.graft.streaming.resolutionMs")
-      .map { raw =>
-        val v =
-          try raw.trim.toLong
-          catch { case _: NumberFormatException => throw Unstreamable(
-            "spark.graft.streaming.resolutionMs must be a positive " +
-              s"millisecond count, got '$raw'") }
-        if (v <= 0) throw Unstreamable(
-          "spark.graft.streaming.resolutionMs must be a positive " +
-            s"millisecond count, got '$raw'")
-        v
-      }.getOrElse(1000L)
+    longConf(df, "spark.graft.streaming.resolutionMs",
+      "a positive millisecond count", 1000L, _ > 0)
+
+  /** a whole-number session setting, `default` when unset; a value that
+    * does not parse or fails `ok` is a typed error naming `what` it must be
+    */
+  private def longConf(df: DataFrame, key: String, what: String,
+                       default: Long, ok: Long => Boolean = _ => true): Long =
+    df.sparkSession.conf.getOption(key).map { raw =>
+      raw.trim.toLongOption.filter(ok).getOrElse(
+        throw Unstreamable(s"$key must be $what, got '$raw'"))
+    }.getOrElse(default)
 
   /** immutable per-compile opt-in context, resolved once at [[compile]]
     * entry (explicit params first, session conf as fallback) and
@@ -684,9 +676,7 @@ object StreamingDql {
       // entirely inside one outer window and grouping by `wt` (end − ε)
       // reproduces the batch grid over child window STARTS exactly.
       val inner = aggregated(child, base, store)
-      val hasWm = inner.queryExecution.analyzed.output.exists(a =>
-        a.name == "wt" && a.metadata.contains("spark.watermarkDelayMs"))
-      if (!hasWm)
+      if (!eventTimed(inner))
         throw Unstreamable(
           "an outer aggregation needs an event-time input — a nested " +
             "derivate loses it (flatMapGroupsWithState output carries no " +
@@ -715,26 +705,10 @@ object StreamingDql {
       // the tag columns). Non-commutative funs fold member values in
       // lexicographic metric order, the batch's pinned order.
       val cols = gb.map { case (ns, key) =>
-        tagCol(store, ns, key).getOrElse(
+        store.tagCol(ns, key).map(n => col(n).cast("string")).getOrElse(
           throw Unstreamable(s"unknown stream tag $ns:$key"))
       }
-      val cond = path.map(pathCond(_, exact = false)).getOrElse(lit(true)) &&
-        where.map(tagCond(_, store)).getOrElse(lit(true))
-      val foldOps = Map(
-        "diff"     -> "acc - x",
-        "product"  -> "acc * x",
-        "quotient" -> "CASE WHEN x = CAST(0 AS DOUBLE) THEN acc ELSE acc / x END")
-      val isFold = foldOps.contains(gf)
-      val aggCol = gf match {
-        case "sum" => graft.core.Exact.dsum(col("value"))
-        case "avg" => graft.core.Exact.davg(col("value"))
-        case "min" => min(col("value"))
-        case "max" => max(col("value"))
-        case _ if isFold =>
-          expr("transform(array_sort(collect_list(struct(metric, value)))," +
-            " x -> x.value)")
-        case other => throw Unstreamable(s"GROUP BY USING $other not supported")
-      }
+      val cond = lookupCond(path, where, store.tagCol)
       // collapse to one value per (series, slot) FIRST — the batch RLookup
       // groupBy combines member series' SLOT values (its leaf is the
       // davg-collapsed series frame), so the cross-series combine here
@@ -742,47 +716,30 @@ object StreamingDql {
       // event in one resolution tick would contribute duplicate fold
       // entries and inflate avg's divisor
       val collapsed = slotCollapse(base.where(cond), resMs, store)
-      val grouped = collapsed
-        .groupBy(timeWindow(collapsed, resMs, resMs).as("w") +:
-          cols.zipWithIndex.map { case (c, i) => c.as(s"g$i") }: _*)
-        .agg(aggCol.as(if (isFold) "vals" else "value"))
-      val valued =
-        if (!isFold) grouped
-        else grouped.withColumn("value",
-          expr(s"aggregate(slice(vals, 2, greatest(size(vals) - 1, 0)), " +
-            s"element_at(vals, 1), (acc, x) -> ${foldOps(gf)})")).drop("vals")
-      valued.select(
-        concat_ws(".", gb.indices.map(i => col(s"g$i").cast("string")): _*)
-          .as("metric"),
-        unix_millis(col("w.start")).as("ws"), col("value"),
-        window_time(col("w")).as("wt"))
+      Combs.groupUsing(gf, collapsed
+          .groupBy(timeWindow(collapsed, resMs, resMs).as("w") +:
+            cols.zipWithIndex.map { case (c, i) => c.as(s"g$i") }: _*))
+        .select(
+          concat_ws(".", gb.indices.map(i => col(s"g$i").cast("string")): _*)
+            .as("metric"),
+          unix_millis(col("w.start")).as("ws"), col("value"),
+          window_time(col("w")).as("wt"))
 
     case RHistFn(name, pOpt, w, htv, sf, child) =>
       // the fused hist reductions are expression aggregates like §2.2, so
       // they stream: int-round, DROP out-of-range (the reference's HDR
       // recording semantics, same as the batch compile), aggregate per
-      // window. `spark.graft.dql.histogram.hdr=true` routes the quantiles
-      // through the same mergeable HDR sketch Aggregator the batch uses
-      // (expr/HdrHistogram): its partial buffer is the streaming
+      // window with the batch's reduction (Aggrs.hist). Under
+      // Aggrs.HdrConf the quantiles use the same mergeable HDR sketch
+      // Aggregator as the batch: its partial buffer is the streaming
       // aggregation's state — fixed-size per (window, metric), merged
-      // across micro-batches like any partial aggregate — so the flag
-      // means the same algorithm on both engines.
-      val useHdr = base.sparkSession.conf
-        .getOption("spark.graft.dql.histogram.hdr").contains("true")
+      // across micro-batches like any partial aggregate. The stream has
+      // no gap rows, so the filter drops only out-of-range points.
       val leafed = leaf(child, base, store)
-      val ints = round(col("value"), 0).cast("long")
+      val ints = Aggrs.histRecorded(col("value"))
       val inRange = leafed.where(ints >= 0L && ints <= htv)
-      val agg = name match {
-        case "median" if useHdr =>
-          graft.expr.HdrHistogram.hdrPercentile(sf, 0.5)(ints)
-        case "percentile" if useHdr =>
-          graft.expr.HdrHistogram.hdrPercentile(sf, pOpt.get)(ints)
-        case "mean" | "stddev" =>
-          Aggrs.spark(if (name == "mean") "avg" else name, pOpt)(
-            ints, orderTs(inRange))
-        case _ =>
-          Aggrs.spark(name, pOpt)(ints, orderTs(inRange)).cast("double")
-      }
+      val agg = Aggrs.hist(name, pOpt, sf,
+        Aggrs.hdrQuantiles(base.sparkSession))(ints)
       inRange
         .groupBy(timeWindow(inRange, w, child.resMs).as("w"), col("metric"))
         .agg(agg.as("value"))
@@ -804,14 +761,8 @@ object StreamingDql {
       val outEnc = Encoders.product[(String, Long, Option[Double])]
       // idle-eviction horizon for the per-metric state (see derivateGroup);
       // default 30 days, ≤ 0 keeps state forever
-      val idleMs = base.sparkSession.conf
-        .getOption("spark.graft.streaming.derivate.idleTimeoutMs")
-        .map { raw =>
-          try raw.trim.toLong
-          catch { case _: NumberFormatException => throw Unstreamable(
-            "spark.graft.streaming.derivate.idleTimeoutMs must be a " +
-              s"millisecond count, got '$raw'") }
-        }.getOrElse(30L * 24 * 3600 * 1000)
+      val idleMs = longConf(base, "spark.graft.streaming.derivate.idleTimeoutMs",
+        "a millisecond count", 30L * 24 * 3600 * 1000)
       val aggd0 = aggregated(child, base, store)
       // the event-time timeout needs a watermark-tagged column on the
       // state operator's input — `wt` (window_time of the child window)
@@ -819,9 +770,7 @@ object StreamingDql {
       // has already been through flatMapGroupsWithState, whose output
       // cannot carry event time; eviction is impossible there, so refuse
       // rather than silently accumulate unbounded state.
-      val hasWm = aggd0.queryExecution.analyzed.output.exists(a =>
-        a.name == "wt" && a.metadata.contains("spark.watermarkDelayMs"))
-      if (idleMs > 0 && !hasWm)
+      if (idleMs > 0 && !eventTimed(aggd0))
         throw Unstreamable(
           "derivate idle eviction needs an event-time input (nested " +
             "derivate loses it) — set " +
@@ -858,42 +807,22 @@ object StreamingDql {
     // operator, the slot collapse chained beneath it like every other
     // shape.
     case RComb(name, children) if children.forall(isRawLeaf) =>
-      val res = children.map(_.resMs).distinct
-      if (res.length != 1)
-        throw Unstreamable("resolution_conflict: combinator children " +
-          s"must share one resolution, got ${res.mkString(", ")} ms")
-      val condVals = children.map(leafCondValue(_, store))
-      val anyCond = condVals.map(_._1).reduce(_ || _)
-      val collapsed = slotCollapse(base.where(anyCond), res.head, store)
-      val branches = condVals.zipWithIndex.map { case ((cond, v), i) =>
-        when(cond, struct(lit(i).as("cidx"), v.cast("double").as("v")))
-      }
+      val res = shared(children.map(_.resMs),
+        "combinator children must share one resolution")
+      val (collapsed, copies) =
+        explodeLeaves(children, base, store, res, "cidx")
       val ex = collapsed
-        .select(timeWindow(collapsed, res.head, res.head).as("w"),
-          explode(filter(array(branches: _*), b => b.isNotNull)).as("c"))
+        .select(timeWindow(collapsed, res, res).as("w"), copies.as("c"))
       val n = children.length
       val combined = name match {
-        case "sum" => ex.groupBy(col("w"))
-          .agg(graft.core.Exact.dsum(col("c.v")).as("value"))
-        case "avg" => ex.groupBy(col("w"))
-          .agg(graft.core.Exact.davg(col("c.v")).as("value"))
-        case "min" => ex.groupBy(col("w")).agg(min(col("c.v")).as("value"))
-        case "max" => ex.groupBy(col("w")).agg(max(col("c.v")).as("value"))
+        case "sum" | "avg" | "min" | "max" =>
+          ex.groupBy(col("w")).agg(Combs.pooled(name, col("c.v")).as("value"))
         case _ =>
           val pivots = (0 until n).map(i =>
             max(when(col("c.cidx") === i, col("c.v"))).as(s"c$i"))
           val piv = ex.groupBy(col("w")).agg(pivots.head, pivots.tail: _*)
-          val folded = name match {
-            case "diff" =>
-              (1 until n).foldLeft[Column](col("c0"))((a, i) => a - col(s"c$i"))
-            case "product" =>
-              (1 until n).foldLeft[Column](col("c0"))((a, i) => a * col(s"c$i"))
-            case "quotient" =>
-              (1 until n).foldLeft[Column](col("c0")) { (a, i) =>
-                when(col(s"c$i") === 0.0, a).otherwise(a / col(s"c$i"))
-              }
-          }
-          piv.select(col("w"), folded.as("value"))
+          piv.select(col("w"),
+            Combs.fold(name, (0 until n).map(i => col(s"c$i"))).as("value"))
       }
       combined.select(lit(name).as("metric"),
         unix_millis(col("w.start")).as("ws"),
@@ -914,27 +843,23 @@ object StreamingDql {
           "streaming combinators take same-window aggregations as " +
             s"children, got: $other")
       }
-      val ws = aggrs.map(_.windowMs).distinct
-      if (ws.length != 1)
-        throw Unstreamable("resolution_conflict: streaming combinator " +
-          s"children must share one window, got ${ws.mkString(", ")} ms")
-      val res = aggrs.map(_.child.resMs).distinct
-      if (res.length != 1)
-        throw Unstreamable("resolution_conflict: streaming combinator " +
-          s"children must share one resolution, got ${res.mkString(", ")} ms")
+      val ws = shared(aggrs.map(_.windowMs),
+        "streaming combinator children must share one window")
+      val res = shared(aggrs.map(_.child.resMs),
+        "streaming combinator children must share one resolution")
       val condVals = aggrs.map(a => leafCondValue(a.child, store))
       val anyCond = condVals.map(_._1).reduce(_ || _)
       // one shared slot collapse under the fused groupBy: per-child
       // conditions and transforms only read metric/tag columns and the
       // slot value, so they evaluate identically on slot rows
-      val collapsed = slotCollapse(base.where(anyCond), res.head, store)
+      val collapsed = slotCollapse(base.where(anyCond), res, store)
       val cvs = aggrs.zip(condVals).zipWithIndex.map {
         case ((a, (cond, v)), i) =>
           Aggrs.spark(a.name, a.const)(when(cond, v),
             when(cond, orderTs(collapsed))).as(s"c$i")
       }
       val piv = collapsed
-        .groupBy(timeWindow(collapsed, ws.head, res.head).as("w"))
+        .groupBy(timeWindow(collapsed, ws, res).as("w"))
         .agg(cvs.head, cvs.tail: _*)
       val cols = aggrs.indices.map(i => col(s"c$i"))
       // null children (no data in window) skip for the commutative funs —
@@ -952,10 +877,7 @@ object StreamingDql {
             .otherwise(cols.map(c => coalesce(c, lit(0.0))).reduce(_ + _) / cnt)
         case "min" => least(cols: _*)
         case "max" => greatest(cols: _*)
-        case "diff" => cols.reduce(_ - _)
-        case "product" => cols.reduce(_ * _)
-        case "quotient" => cols.tail.foldLeft(cols.head)((a, c) =>
-          when(c === 0.0, a).otherwise(a / c))
+        case _ => Combs.fold(name, cols)
       }
       piv.select(lit(name).as("metric"),
         unix_millis(col("w.start")).as("ws"), folded.as("value"),
@@ -991,6 +913,36 @@ object StreamingDql {
         s"not a streamable plan shape (aggregation required): $other")
   }
 
+  /** whether an aggregated branch's `wt` still carries the watermark */
+  private def eventTimed(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.output.exists(a =>
+      a.name == "wt" && a.metadata.contains("spark.watermarkDelayMs"))
+
+  /** the one value all `vals` share, else the typed resolution_conflict */
+  private def shared(vals: Seq[Long], what: String): Long = {
+    val d = vals.distinct
+    if (d.length != 1)
+      throw Unstreamable(s"resolution_conflict: $what, got ${d.mkString(", ")} ms")
+    d.head
+  }
+
+  /** ONE slot collapse over the union of the raw leaves' series, and the
+    * row-local explode of each slot row into one (`id`, v) copy per leaf
+    * it matches — a series matching two leaves contributes twice, exactly
+    * the batch union
+    */
+  private def explodeLeaves(leaves: Seq[RExpr], base: DataFrame,
+                            store: StreamStore, res: Long, id: String)
+                           (implicit opts: CompileOpts): (DataFrame, Column) = {
+    val condVals = leaves.map(leafCondValue(_, store))
+    val collapsed =
+      slotCollapse(base.where(condVals.map(_._1).reduce(_ || _)), res, store)
+    val copies = condVals.zipWithIndex.map { case ((cond, v), i) =>
+      when(cond, struct(lit(i).as(id), v.cast("double").as("v")))
+    }
+    (collapsed, explode(filter(array(copies: _*), b => b.isNotNull)))
+  }
+
   /** a raw leaf the passthrough/combinator paths accept: scan, ungrouped
     * lookup, or a pointwise-transform chain over one (GROUP BY changes
     * the output key — leafCondValue rejects it with the typed error)
@@ -1009,13 +961,12 @@ object StreamingDql {
     */
   private def leafCondValue(p: RExpr, store: StreamStore): (Column, Column) =
     p match {
-      case RScan(_, path, _) => (pathCond(path, exact = true), col("value"))
+      case RScan(_, path, _) => (getCond(path), col("value"))
       case RLookup(_, path, where, gb, _, _) =>
         if (gb.nonEmpty)
           throw Unstreamable("GROUP BY tag under an aggregation: group keys " +
             "change the output key — use the batch compiler or group post-sink")
-        (path.map(pathCond(_, exact = false)).getOrElse(lit(true)) &&
-          where.map(tagCond(_, store)).getOrElse(lit(true)), col("value"))
+        (lookupCond(path, where, store.tagCol), col("value"))
       case RTrans(name, c, child) =>
         if (name == "derivate" || name == "confidence")
           throw Unstreamable(s"$name is not a row-local transform")
@@ -1054,14 +1005,8 @@ object StreamingDql {
         s"confidence window $w ms must be a positive multiple of the " +
           s"$res ms stream resolution")
     val slots = w / res
-    val maxSlots = df.sparkSession.conf
-      .getOption("spark.graft.streaming.conf.maxSlots")
-      .map { raw =>
-        try raw.trim.toLong
-        catch { case _: NumberFormatException => throw Unstreamable(
-          "spark.graft.streaming.conf.maxSlots must be a slot count, " +
-            s"got '$raw'") }
-      }.getOrElse(100000L)
+    val maxSlots = longConf(df, "spark.graft.streaming.conf.maxSlots",
+      "a slot count", 100000L)
     if (slots > maxSlots)
       throw Unstreamable(
         s"${name}: $slots slots per window ($w ms / $res ms) exceeds the " +
@@ -1096,32 +1041,5 @@ object StreamingDql {
       case "last_below"  => expr(endOr(filt("<"), -1))
       case other => throw Unstreamable(s"${other}_conf is not streamable")
     }
-  }
-
-  /** On the stream the tags ARE event columns, so tag predicates need no
-    * index: the store's tag map names the physical column (string-compared,
-    * the DQL tag-value type). Unknown tags reproduce the batch semantics
-    * for missing tag columns — `=` never matches, `!=` always.
-    */
-  private def tagCol(store: StreamStore, ns: String,
-                     key: String): Option[Column] =
-    store.tagCol(ns, key).map(n => col(n).cast("string"))
-
-  private def tagCond(f: Ast.TagFilter, store: StreamStore): Column = f match {
-    case Ast.TagEq(ns, key, v) =>
-      tagCol(store, ns, key).map(_ === v).getOrElse(lit(false))
-    case Ast.TagNeq(ns, key, v) =>
-      tagCol(store, ns, key).map(_ =!= v).getOrElse(lit(true))
-    case Ast.TagAnd(a, b) => tagCond(a, store) && tagCond(b, store)
-    case Ast.TagOr(a, b)  => tagCond(a, store) || tagCond(b, store)
-  }
-
-  private def pathCond(path: Seq[String], exact: Boolean): Column = {
-    val parts = split(col("metric"), "\\.")
-    val sizeOk =
-      if (exact) size(parts) === path.length else size(parts) >= path.length
-    path.zipWithIndex.collect {
-      case (p, i) if p != "*" => element_at(parts, i + 1) === p
-    }.foldLeft(sizeOk)(_ && _)
   }
 }

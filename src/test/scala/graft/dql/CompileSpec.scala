@@ -194,4 +194,48 @@ class CompileSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT avg('purchase'.'3' BUCKET 'testdata', 1 h) LAST 31 d", nowMs)
     assert(df.count() > 0)
   }
+
+  test("GROUP BY USING diff/product/quotient over two single-series " +
+    "members equals the combinator spelling, zero divisor included") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, concat_ws}
+    // two complete series a.1 and a.2 on a 1 s grid; a.2 is zero at
+    // every third point, where quotient divides by one instead
+    val rows = (0 until 12).flatMap { i =>
+      Seq(("a", "1", i * 1000L, 1.5 + i), ("a", "2", i * 1000L,
+        if (i % 3 == 0) 0.0 else 0.25 * i))
+    }
+    val frame = rows.toDF("mtype", "muser", "ts_ms", "value")
+      .select(concat_ws(".", col("mtype"), col("muser")).as("metric"),
+        col("mtype"), col("muser"), col("ts_ms"), col("value"))
+    val store = new SeriesStore {
+      def corpusKey: String = "compile-spec-pair"
+      def resolutionMs(bucket: String): Long = 1000L
+      def series(sp: SparkSession, bucket: String) = frame
+      def tagCol(ns: String, key: String): Option[String] = key match {
+        case "type" => Some("mtype")
+        case "user" => Some("muser")
+        case _      => None
+      }
+      val tagCols: Seq[String] = Seq("mtype", "muser")
+      def events(sp: SparkSession, bucket: String) =
+        throw new UnsupportedOperationException("no events")
+    }
+    def points(dql: String): Set[(Long, Double)] =
+      Compiler.run(spark, store, 12000L, dql)
+        .select("ts_ms", "value").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSet
+    for (f <- Seq("diff", "product", "quotient")) {
+      val grouped = points(s"SELECT 'a' FROM 'x' GROUP BY $$'graft':'type' " +
+        s"USING $f BETWEEN 0 AND 12000")
+      val comb = points(s"SELECT $f('a'.'1' BUCKET 'x', 'a'.'2' BUCKET 'x') " +
+        "BETWEEN 0 AND 12000")
+      assert(grouped.size == 12, f)
+      assert(grouped == comb, f)
+    }
+    assert(points("SELECT quotient('a'.'1' BUCKET 'x', 'a'.'2' BUCKET 'x') " +
+      "BETWEEN 0 AND 3000") == Set((0L, 1.5), (1000L, 2.5 / 0.25),
+        (2000L, 3.5 / 0.5)))
+  }
 }

@@ -200,6 +200,13 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "eq_avg_glob", append = true)
   }
 
+  test("windowed avg over a glob LOOKUP: `*` is a wildcard segment in " +
+    "both engines") {
+    assertEquivalent(
+      s"SELECT avg('purchase'.* FROM 'testdata', 1 m) BETWEEN 0 AND $EndMs",
+      "eq_avg_glob_lookup", append = true)
+  }
+
   test("RAW select (no aggregation): slot rows stream ≡ batch leaf") {
     assertEquivalent(
       s"SELECT 'purchase'.'1' BUCKET 'testdata' BETWEEN 0 AND $EndMs",
