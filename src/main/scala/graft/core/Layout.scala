@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * - **in-file sort by (metric, ts_ms)**: parquet row-group statistics
   *   make per-series scans skip row groups (metric min/max), and
   *   time-ordered layout keeps windowed aggregation input runs local.
-  * - the testdata path (one small parquet per table) bypasses this; the
-  *   layout is exercised by LayoutSpec, which writes a partitioned copy
-  *   and asserts pruning in the physical plan.
+  * - the testdata path (one small parquet per table) writes no files; its
+  *   memo ([[SeriesOps.series]]) sorts the same way inside hash(metric)
+  *   partitions. LayoutSpec writes a partitioned copy and asserts pruning
+  *   in the physical plan.
   */
 object Layout {
   /** write a (metric, …, ts_ms, value) series frame date-partitioned.

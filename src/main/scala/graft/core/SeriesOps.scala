@@ -20,9 +20,9 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType,
   *   - slot value  = mean of event values falling in the 1 s slot
   *
   * Everything is plain DataFrame ops: the slot bucketing is one groupBy
-  * (map-side combinable), the spine for gap-fill is generated distributed
-  * (spark.range cross-join catalog — never on the driver), so the same plan
-  * holds at 100 TB with partitioned input.
+  * above the metric exchange, the spine for gap-fill is generated
+  * distributed (spark.range cross-join catalog — never on the driver), so
+  * the same plan holds at 100 TB with partitioned input.
   */
 object SeriesOps {
   val ResolutionMs = 1000L
@@ -82,8 +82,13 @@ object SeriesOps {
   }
 
   /** (metric, mtype, muser, ts_ms, value) at 1 s resolution — present slots
-    * only. One shuffle (the groupBy); filter on mtype/muser pushes into the
-    * parquet scan of `events` before the shuffle.
+    * only, hash-partitioned on `metric` into `defaultParallelism`
+    * partitions and sorted by (metric, ts_ms) within each; the metric
+    * exchange is the only shuffle. The cached scan reports that layout, so
+    * per-series operators above it (the DQL window `groupBy`, the
+    * dense-leaf catalog `distinct`, `partitionBy(metric).orderBy(ts_ms)`)
+    * plan no exchange, the window no sort, and the cached batch stats skip
+    * the batches a metric predicate cannot match.
     *
     * Memoized + persisted per (session, dir): in production the series
     * table IS materialized storage (core/Layout); the testdata path derives
@@ -96,26 +101,27 @@ object SeriesOps {
 
   private val seriesMemo = new Caches.ArtifactMemo[(SparkSession, String), DataFrame]
 
-  /** The non-materialized derivation: predicates push through the slot
-    * aggregation into the raw events parquet scan. Use when scanning a
-    * narrow slice of a large raw history once — the memoized [[series]]
-    * is better when many queries share the table (its cached scans prune
-    * via in-memory batch stats instead of parquet pushdown).
+  /** The non-materialized derivation, in the layout of [[series]]:
+    * predicates push through the slot aggregation and the metric exchange
+    * into the raw events parquet scan. Use when scanning a narrow slice of
+    * a large raw history once — the memoized [[series]] is better when
+    * many queries share the table (its cached batch stats prune instead).
     */
   def seriesFresh(spark: SparkSession, dir: String): DataFrame =
     buildSeries(spark, dir)
 
+  // not widened: the metric repartition spreads the scan, and its hash
+  // partitioning clusters the groupBy keys, which contain `metric`
   private def buildSeries(spark: SparkSession, dir: String): DataFrame =
-    events(spark, dir)
-      .groupBy(
-        col("event_type").as("mtype"),
-        col("user_id").as("muser"),
-        Exact.wstart(col("ts_ms"), ResolutionMs).as("ts_ms2"))
-      .agg(Exact.davg(col("value")).as("value"))
-      .withColumnRenamed("ts_ms2", "ts_ms")
+    events(spark, dir, widen = false)
       .select(
-        concat_ws(".", col("mtype"), col("muser")).as("metric"),
-        col("mtype"), col("muser"), col("ts_ms"), col("value"))
+        concat_ws(".", col("event_type"), col("user_id")).as("metric"),
+        col("event_type").as("mtype"), col("user_id").as("muser"),
+        Exact.wstart(col("ts_ms"), ResolutionMs).as("ts_ms"), col("value"))
+      .repartition(spark.sparkContext.defaultParallelism, col("metric"))
+      .groupBy("metric", "mtype", "muser", "ts_ms")
+      .agg(Exact.davg(col("value")).as("value"))
+      .sortWithinPartitions("metric", "ts_ms")
 
   /** DuckDB mirror of [[series]] — keep in lockstep. The decimal→double
     * hop goes through VARCHAR ([[Exact.davgSql]] convention): DuckDB's

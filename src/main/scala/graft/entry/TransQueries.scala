@@ -21,7 +21,6 @@ object TransQueries extends QueryProvider {
   }
 
   private val DayStart = 1704412800000L
-  private val DayEnd   = 1704499200000L
 
   private def base(s: SparkSession, dir: String): DataFrame =
     SeriesOps.series(s, dir).where(col("mtype") === "purchase")

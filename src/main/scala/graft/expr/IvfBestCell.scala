@@ -22,12 +22,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, Str
   * Why native: `transform`/`aggregate` are CodegenFallback, so the HOF
   * formulation interprets the whole scoring subtree per centroid —
   * measured 1.8 s per million vectors PER CENTROID on 8 cores
-  * (AssignTaxProbe, 1M×64-dim corpus): ~113 s/Mvec at nCells=64, which
+  * (NOTES_r10, 1M×64-dim corpus): ~113 s/Mvec at nCells=64, which
   * multiplied by a production corpus and a trained quantizer's per-
   * iteration reassignment is the dominant index-build cost. This kernel
   * is the [[SimhashFp]] playbook: one tight primitive loop per row in a
   * static method, one call emitted by codegen so whole-stage codegen
-  * survives around it (measured numbers in AssignTaxProbe / NOTES_r10).
+  * survives around it (measured numbers in NOTES_r10).
   *
   * Both `array<float>` and `array<double>` vectors and centroids are
   * supported (the Lloyd trainer's updated centroids are double means;

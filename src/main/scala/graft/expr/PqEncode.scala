@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   *
   * Why native: the HOF formulation is a transform∘aggregate nest —
   * CodegenFallback, interpreting m × ksub × 3 fixed-point dots per row —
-  * measured 102 s per million vectors at m=8, ksub=16 (PqTaxProbe,
+  * measured 102 s per million vectors at m=8, ksub=16 (NOTES_r10,
   * 200k×64-dim corpus, 8 cores) and linear in ksub: ~1266 s/Mvec at
   * ksub=256. Encoding is an index-build cost paid per corpus vector per
   * retrain — the same profile that justified [[IvfBestCell]]. This

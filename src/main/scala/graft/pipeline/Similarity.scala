@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -257,7 +257,7 @@ object Similarity {
     * has identical semantics (NativeAssignSpec pins them equal row-for-
     * row) but is CodegenFallback and interprets the scoring subtree per
     * centroid — measured 1.8 s/Mvec/centroid vs the kernel's tight loop
-    * (AssignTaxProbe). The streaming query side keeps the HOF form (it
+    * (NOTES_r10). The streaming query side keeps the HOF form (it
     * needs the full score array for multi-probe, and its cardinality is
     * queries, not corpus).
     */
@@ -272,7 +272,7 @@ object Similarity {
       // deliberate: this predicate is pushed into the nested-loop join
       // condition, where a cell-based guard would evaluate the whole
       // argmax kernel a second time per row (measured 2× the assignment
-      // cost, AssignPlanProbe) while size(cents) > 0 is O(1)
+      // cost, NOTES_r10) while size(cents) > 0 is O(1)
       .where(size(col("cents")) > 0)
       .select(col("vec_id"), col("embedding"), col("nrm"),
         graft.expr.IvfBestCell(col("embedding"), col("nrm"), col("cents"),
@@ -827,7 +827,7 @@ object Similarity {
     * seeds — the case training exists for. On the driver's near-uniform
     * synthetic embeddings training cannot beat the seed (measured
     * 0.47–0.50 vs 0.510 across iters 1–6, identical cell balance;
-    * TrainedRecallProbe) because there is no cluster structure to find —
+    * NOTES_r10) because there is no cluster structure to find —
     * recall there is probe-count-bound, not trainer-bound.
     */
   def ivfTrainedTopK(emb: DataFrame, queries: DataFrame, nCells: Int,
@@ -948,7 +948,7 @@ object Similarity {
     * This is the SEMANTICS CONTRACT for the native
     * [[graft.expr.PqEncode]] kernel that [[pqEncode]] actually runs
     * (transform∘aggregate nests are CodegenFallback — measured
-    * 102 s/Mvec at ksub=16, PqTaxProbe); NativePqEncodeSpec pins the
+    * 102 s/Mvec at ksub=16, NOTES_r10); NativePqEncodeSpec pins the
     * two equal row-for-row.
     */
   private[graft] def pqCodes(vec: Column, cbs: Column, m: Int,

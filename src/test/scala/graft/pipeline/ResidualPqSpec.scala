@@ -14,7 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   *     directions, so the PQ shortlist tracks the exact in-cell ranking
   *     strictly better than raw-vector coding at identical (m, ksub).
   *     The driver corpus is near-uniform (no structure to exploit —
-  *     TrainedRecallProbe), so this is proven on the same clustered
+  *     NOTES_r10), so this is proven on the same clustered
   *     deterministic corpus TrainedIvfSpec uses for the Lloyd trainer.
   *  2. code-domain bounds on the real corpus,
   *  3. rerank ≥ cell size reproduces the exact IVF search bit-for-bit
@@ -77,7 +77,7 @@ class ResidualPqSpec extends AnyFunSuite with BeforeAndAfterAll {
     // m=2 (4-dim subspaces): the regime where residual centering matters
     // most — each coarse subspace must otherwise spend its entries on the
     // spread of cluster DIRECTIONS instead of the within-cell ranking.
-    // ResidualProbe grid (this corpus, noise 0.2–0.7, 60 queries):
+    // NOTES_r11 grid (this corpus, noise 0.2–0.7, 60 queries):
     // m=2/ksub=16 raw 0.72 → residual 0.88–0.89 at every noise level;
     // m=2/ksub=8 raw 0.43 → residual 0.61; the one regime where raw
     // edges ahead (m=4/ksub=8, +0.02) is where 8 entries over 2-dim

@@ -13,7 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * Why a synthetic clustered corpus: the driver's embeddings are
   * near-uniform directions — no cluster structure exists for ANY trainer
   * to find, and measured recall there is flat across iters 1–6 at
-  * 0.47–0.50 vs the 0.510 seed (TrainedRecallProbe, identical E[scanned]
+  * 0.47–0.50 vs the 0.510 seed (NOTES_r10, identical E[scanned]
   * cell balance). Asserting a climb on that corpus would pin noise. This
   * corpus has 4 well-separated cluster directions, and the seed is bad
   * in the way that actually kills recall at nProbe=1: two seeds land
