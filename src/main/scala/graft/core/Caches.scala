@@ -229,9 +229,13 @@ object Caches {
     * memo knows about — would keep serving stale blocks to any
     * canonically-equal subplan, and the memo rebuild itself could read
     * it, so a refreshed corpus could pair with a stale frozen artifact.
+    *
+    * Also forgets the [[Tables]] catalog's schemas under `dir`, so the
+    * next read of each table there pays its inference again.
     */
   def evictArtifacts(spark: SparkSession, dir: String): Int = {
     org.apache.spark.sql.GraftBridge.recacheByPath(spark, dir)
+    Tables.forget(spark, dir)
     var n = 0
     artifactMemos.forEach(m => n += m.evict(spark, dir))
     n

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Production storage layout for the series table at 100 TB (SURVEY §4
   * "time-range pushdown" → partition pruning):
@@ -14,12 +15,27 @@ import org.apache.spark.sql.functions._
   * - **in-file sort by (metric, ts_ms)**: parquet row-group statistics
   *   make per-series scans skip row groups (metric min/max), and
   *   time-ordered layout keeps windowed aggregation input runs local.
+  * - **declared schema**: [[Schema]] is the table's one schema, and both
+  *   writers produce it — [[writeSeriesPartitioned]] from the
+  *   [[SeriesOps.series]] memo, and the streaming sink of
+  *   [[graft.streaming.SeriesIngest]]. [[readSeries]] reads under it
+  *   through [[Tables.read]], so opening the table (and building a DQL
+  *   query over [[graft.dql.LayoutStore]]) starts no schema-inference job;
+  *   `dt` is still discovered from the directory names and pruned.
+  *   TableCatalogSpec fails if either writer drifts from it.
   * - the testdata path (one small parquet per table) writes no files; its
   *   memo ([[SeriesOps.series]]) sorts the same way inside hash(metric)
   *   partitions. LayoutSpec writes a partitioned copy and asserts pruning
   *   in the physical plan.
   */
 object Layout {
+  /** the series table: the [[SeriesOps.series]] columns plus the `dt`
+    * partition column
+    */
+  val Schema: StructType = StructType.fromDDL(
+    "metric STRING, mtype STRING, muser BIGINT, ts_ms BIGINT, value DOUBLE, " +
+      "dt DATE")
+
   /** write a (metric, …, ts_ms, value) series frame date-partitioned.
     * dt is derived timezone-INDEPENDENTLY (floor-div to UTC day number →
     * date_from_unix_date) so a layout written from a non-UTC session
@@ -35,11 +51,11 @@ object Layout {
       .sortWithinPartitions("metric", "ts_ms")
       .write.partitionBy("dt").mode("overwrite").parquet(path)
 
-  /** read back; time predicates on ts_ms should be paired with dt
-    * predicates by the caller (or derive them here from a range).
+  /** read back under [[Schema]]; time predicates on ts_ms should be paired
+    * with dt predicates by the caller (or derive them here from a range).
     */
   def readSeries(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.read(spark, path, Schema)
 
   /** range scan with explicit partition predicate derived from the ms
     * range — this is what the DQL compiler's leaf would issue in a

@@ -31,7 +31,15 @@ object SeriesOps {
     * readable only as int64 nanos (SPARK-40819), see [[tsMillis]].
     */
   def readNanosAsLong(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(NanosAsLong, "true")
+
+  /** Whether `spark` reads TIMESTAMP(NANOS) as int64 nanos now — part of
+    * the [[Tables]] catalog key, since it changes what an inference yields.
+    */
+  def nanosAsLong(spark: SparkSession): Boolean =
+    spark.conf.get(NanosAsLong, "false").toBoolean
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** Decode `events.ts`, read as type `t`, to epoch millis. The testdata
     * generator has shipped `ts` under three parquet encodings across

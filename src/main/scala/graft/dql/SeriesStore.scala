@@ -69,6 +69,10 @@ trait SeriesStore {
   * [[graft.core.Layout]]. Same DQL, same compiler — the overridden
   * [[scanRange]] adds the dt partition predicates, so every query's
   * timeframe prunes partitions before IO (verified in LayoutStoreSpec).
+  * Both reads go through [[graft.core.Layout.readSeries]] under the
+  * declared [[graft.core.Layout.Schema]], so building a query over a
+  * growing table lists its files but runs no schema-inference job
+  * (TableCatalogSpec).
   */
 final class LayoutStore(path: String,
                         resolution: Long = graft.core.SeriesOps.ResolutionMs)

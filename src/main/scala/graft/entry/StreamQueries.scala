@@ -294,18 +294,6 @@ object StreamQueries extends QueryProvider {
     !fresh
   }
 
-  /** Memoized parquet schema of a staged file (footer read is a per-gate
-    * driver-side cost otherwise — ~0.1 s × 60+ stream gates; the staged
-    * copy is immutable for the process lifetime, so the schema is a
-    * property of the staged artifact, i.e. provisioning).
-    */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
-  private def stagedSchema(s: SparkSession,
-                           path: String): org.apache.spark.sql.types.StructType =
-    schemaMemo.computeIfAbsent(path, p => s.read.parquet(p).schema)
-
   /** Run `stage` against the preferred (tmpfs) root, falling back to the
     * disk-backed temp root when staging headroom runs out (r18 advice:
     * an ENOSPC mid-stage took the gate down; a slower disk-backed copy
@@ -350,8 +338,7 @@ object StreamQueries extends QueryProvider {
     if (copied || !Files.exists(sentinel)) {
       SeriesOps.readNanosAsLong(s)
       val build = staged.resolve("_sentinel_build")
-      val evHead = s.read.parquet(staged.resolve("events.parquet").toString)
-        .limit(1)
+      val evHead = Tables(s, staged.toString, "events").limit(1)
       evHead
         .withColumn("ts",
           SeriesOps.tsValue(SentinelMs, evHead.schema("ts").dataType))
@@ -386,7 +373,9 @@ object StreamQueries extends QueryProvider {
       : DataFrame = {
     val staged = stage(s, dir, table)
     if (table == "events") SeriesOps.readNanosAsLong(s)
-    val sch = stagedSchema(s, s"$staged/$table.parquet")
+    // the staged copy does not change between replays, so the catalog
+    // infers its schema once per copy, not once per replay
+    val sch = Tables.schema(s, s"$staged/$table.parquet")
     val src = s.readStream.schema(sch).parquet(staged)
     table match {
       case "events" =>

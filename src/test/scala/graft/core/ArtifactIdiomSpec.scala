@@ -1,6 +1,7 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,29 +15,39 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - the DQL combine functions live in `ops/Combs.scala` and the fused
   *     histogram reduction's HDR switch in `ops/Aggrs.scala`, so a fold
   *     body or a `quotient` case in either DQL compiler, or the HDR
-  *     setting named outside Aggrs, fails.
+  *     setting named outside Aggrs, fails;
+  *   - parquet tables are read only through `core/Tables.scala` (declared
+  *     schema or catalog), so a `.read.parquet(` or `.read.schema(`
+  *     anywhere else fails.
   */
 class ArtifactIdiomSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
+
+  /** (path relative to src/main/scala, text) of the src/main files whose
+    * relative path is `inScope`
+    */
+  private def sources(inScope: String => Boolean): List[(String, String)] = {
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val stream = Files.walk(root)
+    try stream.iterator.asScala
+      .map(p => (p, root.relativize(p).toString))
+      .filter { case (p, rel) => p.toString.endsWith(".scala") && inScope(rel) }
+      .map { case (p, rel) =>
+        (rel, new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+      }.toList
+    finally stream.close()
+  }
 
   /** `file:line: text` of every line that `hit`s in the src/main files
     * whose path relative to src/main/scala is `inScope`
     */
   private def offenders(inScope: String => Boolean)(
-      hit: String => Boolean): List[String] = {
-    assert(Files.isDirectory(root), s"run from the repo root: $root")
-    val stream = Files.walk(root)
-    try stream.iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") &&
-        inScope(root.relativize(p).toString))
-      .flatMap { (p: Path) =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if hit(line) =>
-            s"${root.relativize(p)}:${i + 1}: ${line.trim}"
-        }
-      }.toList
-    finally stream.close()
-  }
+      hit: String => Boolean): List[String] =
+    sources(inScope).flatMap { case (rel, text) =>
+      text.linesIterator.zipWithIndex.collect {
+        case (line, i) if hit(line) => s"$rel:${i + 1}: ${line.trim}"
+      }
+    }
 
   test("no hand-built artifact cache or direct sanction outside Caches") {
     val found = offenders(_ != "graft/core/Caches.scala")(line =>
@@ -61,5 +72,24 @@ class ArtifactIdiomSpec extends AnyFunSuite {
     val hdr = offenders(_ != "graft/ops/Aggrs.scala")(
       _.contains("spark.graft.dql.histogram.hdr"))
     assert(hdr.isEmpty, hdr.mkString("\n", "\n", ""))
+  }
+
+  test("no parquet read outside core/Tables") {
+    val read = """\.read\s*\.\s*(parquet|schema)\s*\(""".r
+    // Bench's fixed-work calibration probes: their seconds are compared
+    // across runs as a measure of box load alone, so each probe read
+    // must do the same work every time — a bare read that infers its
+    // schema, whatever the catalog holds
+    val probes = Seq("def probeDf", "def shuffleW")
+    val found = sources(_ != "graft/core/Tables.scala").flatMap {
+      case (rel, text) =>
+        val lines = text.linesIterator.toIndexedSeq
+        read.findAllMatchIn(text).map { m =>
+          val i = text.substring(0, m.start).count(_ == '\n')
+          (i, lines(i).trim)
+        }.collect { case (i, line) if !(rel == "graft/Bench.scala" &&
+            probes.exists(line.startsWith)) => s"$rel:${i + 1}: $line" }
+    }
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }
